@@ -34,9 +34,6 @@ class TableSpec:
     ckpt_dir: str | None = None
     #: Source topic / stream name (``settings['kafka_topic']``).
     topic: str | None = None
-    #: Hive-style partition columns of the raw layer
-    #: (``raw_data_handler.py:84``).
-    partition_cols: tuple[str, ...] = ("op_year", "op_month", "op_day")
     #: ``lww`` (whole-row last-writer-wins, reference W1) or
     #: ``coalesce`` (column-wise latest-non-null, the reference's dead
     #: ``_coalesce_updates``, ``daily_data_handler.py:111-114``).

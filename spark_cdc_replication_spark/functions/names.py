@@ -14,8 +14,6 @@ We implement ONE deterministic rule used by every stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 #: Name the Kafka/ingest timestamp keeps after flattening.
 INGEST_TS = "timestamp"
 #: Deterministic rename target for a payload column named `timestamp`
@@ -55,11 +53,3 @@ def sanitized_payload_names(payload_cols: list[str], reserved: tuple[str, ...] =
         out[c] = clean
     return out
 
-
-def sanitize_columns(df: DataFrame, reserved: tuple[str, ...] = (INGEST_TS,)) -> DataFrame:
-    """Apply the rename map to every column except the reserved ones."""
-    renames = sanitized_payload_names(
-        [c for c in df.columns if c not in reserved], reserved
-    )
-    changed = {old: new for old, new in renames.items() if old != new}
-    return df.withColumnsRenamed(changed) if changed else df

@@ -6,7 +6,20 @@ Reference behavior being re-expressed (never copied):
   ``/root/reference/pipelines/raw_data_handler.py:51`` (P1).
 * ``from_json`` + ``select("data.*")`` struct flatten:
   ``daily_data_handler.py:63-66``, ``history_data_handler.py:88-90``
-  (P3).
+  (P3).  Split here into two steps: the ``from_json``, run ONCE inside
+  the raw-load stream (:func:`..sources.raw.landing_projection`), and
+  :func:`flatten_payload` (names and the reserved-``timestamp``
+  rename), run on every read of the typed ``payload`` column.
+  :func:`parse_envelope` composes the two for frames that still carry
+  only the JSON string (registry queries, tests).  The reference's ORC
+  raw layer holds only the JSON, so each of its stages parses it again;
+  this engine's raw layer is ``(timestamp, value, payload, op_year,
+  op_month, op_day)`` with ``value`` verbatim, so no raw read parses.
+  With the payload fixed at landing, a registry field added later reads
+  NULL for older rows, a field the registry did not know at landing
+  lives only in ``value`` (re-land to recover it), a changed field type
+  fails the read (parquet), and roots landed in the JSON-only layout
+  must be re-landed — see :mod:`..sources.raw`.
 * Name sanitization: ``daily_data_handler.py:70-72``,
   ``history_data_handler.py:94-109`` (P5) — unified here, see
   :mod:`..functions.names`.
@@ -40,34 +53,48 @@ def decode_envelope(df: DataFrame, ts_col: str = "timestamp", value_col: str = "
     )
 
 
+def flatten_payload(
+    df: DataFrame,
+    payload_col: str,
+    keep_cols: Sequence[str] = (INGEST_TS,),
+) -> DataFrame:
+    """Typed payload struct -> flattened, name-sanitized change rows.
+
+    The ingest timestamp (and any other ``keep_cols``) stay top-level;
+    a payload field that collides with a reserved name is renamed
+    deterministically *at flatten time* (a naive ``select("data.*")``
+    would materialize two same-named columns and make the rename
+    ambiguous).  The fields come from the struct's own type, so the
+    frame's schema — the registry schema the raw layer is read with —
+    is the only source of truth.
+    """
+    keep = [c for c in keep_cols if c in df.columns]
+    fields = [f.name for f in df.schema[payload_col].dataType.fields]
+    renames = sanitized_payload_names(fields, reserved=tuple(keep))
+    payload = F.col(payload_col)
+    return df.select(
+        *keep, *[payload.getField(f).alias(renames[f]) for f in fields]
+    )
+
+
 def parse_envelope(
     df: DataFrame,
     payload_schema: StructType,
     value_col: str = "value",
     keep_cols: Sequence[str] = (INGEST_TS,),
 ) -> DataFrame:
-    """JSON payload -> flattened, name-sanitized change rows.
+    """JSON payload -> flattened, name-sanitized change rows, for frames
+    that hold only the JSON string: ``from_json`` then
+    :func:`flatten_payload`.  The raw layer already holds the parsed
+    struct; its reads call :func:`flatten_payload` alone.
 
-    One declarative projection: ``from_json`` with an *explicit* schema
-    (no per-run inference scan — SURVEY.md §4 "double scan"), struct
-    flatten, deterministic rename.  The ingest timestamp (and any other
-    ``keep_cols``) stay top-level; a payload column that collides with a
-    reserved name is renamed deterministically *at flatten time* (a
-    naive ``select("data.*")`` would materialize two same-named columns
-    and make the rename ambiguous).
-    """
+    ``from_json`` takes an *explicit* schema (no per-run inference scan
+    — SURVEY.md §4 "double scan") and is PERMISSIVE: a malformed
+    payload, or a field missing from the JSON, reads NULL; a JSON key
+    the schema does not name is dropped."""
     keep = [c for c in keep_cols if c in df.columns]
-    renames = sanitized_payload_names(
-        [f.name for f in payload_schema.fields], reserved=tuple(keep)
-    )
-    data = F.from_json(F.col(value_col), payload_schema).alias("data")
-    return df.select(*[F.col(c) for c in keep], data).select(
-        *keep,
-        *[
-            F.col("data").getField(f.name).alias(renames[f.name])
-            for f in payload_schema.fields
-        ],
-    )
+    data = F.from_json(F.col(value_col), payload_schema).alias("__payload")
+    return flatten_payload(df.select(*keep, data), "__payload", keep)
 
 
 @dataclass
@@ -103,6 +130,7 @@ def drop_meta(df: DataFrame) -> DataFrame:
 
 __all__ = [
     "decode_envelope",
+    "flatten_payload",
     "parse_envelope",
     "route_ops",
     "drop_meta",

@@ -13,6 +13,20 @@ Differences from the reference, all documented in the operator
 modules: explicit schema (no per-run inference), unified name
 sanitization, deterministic LWW tie-break, AQE-governed joins, staging
 promote instead of tmp-TRUNCATE, availableNow trigger.
+
+The payload is parsed once, at landing.  The raw layer is
+``(timestamp, value, payload, op_year, op_month, op_day)``
+(:mod:`.sources.raw`), where the reference's ORC raw layer holds only
+the JSON ``value`` and every stage re-parses it.  Every raw read here
+(:meth:`changes_for`, :meth:`rebuild_snapshot`, and through them
+:meth:`merge_day` and :meth:`increment`) passes the registry's raw
+schema — no footer inference — and flattens the typed ``payload``; no
+raw-layer read plan contains ``from_json``, and none scans ``value``.
+Drift: a registry field newer than a row reads NULL for it, a field
+the registry did not know at landing lives only in ``value`` (re-land
+to recover it), and a changed field type fails at read time (parquet;
+ORC converts, see :mod:`.sources.raw`).  Roots landed in the JSON-only
+layout must be re-landed; reads and landing refuse them.
 """
 
 from __future__ import annotations
@@ -24,7 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from .config import TableSpec
-from .operators.cdc_parse import parse_envelope
+from .operators.cdc_parse import flatten_payload
 from .operators.merge import (
     apply_changes,
     increment_append,
@@ -34,6 +48,8 @@ from .operators.merge import (
 from .sources import catalog
 from .sources.raw import (
     PARTITION_COLS,
+    PAYLOAD_COL,
+    raw_schema,
     read_raw_all,
     read_raw_day,
     read_raw_through,
@@ -52,12 +68,17 @@ class CdcPipeline:
         self.spark = spark
         self.spec = spec
         self.payload_schema = payload_schema
+        self.raw_schema = raw_schema(payload_schema)
 
     # -- stage 1 ----------------------------------------------------------
     def land(self, envelope: DataFrame) -> StreamingQuery:
         assert self.spec.data_dir and self.spec.ckpt_dir
         return land_stream(
-            envelope, self.spec.data_dir, self.spec.ckpt_dir, fmt=self.spec.fmt
+            envelope,
+            self.payload_schema,
+            self.spec.data_dir,
+            self.spec.ckpt_dir,
+            fmt=self.spec.fmt,
         )
 
     # -- raw read + parse --------------------------------------------------
@@ -65,12 +86,13 @@ class CdcPipeline:
         """Parsed change rows for one ingest day (None = all days,
         the history bootstrap path, history_data_handler.py:77-81)."""
         assert self.spec.data_dir
+        root, fmt, schema = self.spec.data_dir, self.spec.fmt, self.raw_schema
         raw = (
-            read_raw_day(self.spark, self.spec.data_dir, day, fmt=self.spec.fmt)
+            read_raw_day(self.spark, root, day, schema, fmt=fmt)
             if day is not None
-            else read_raw_all(self.spark, self.spec.data_dir, fmt=self.spec.fmt)
+            else read_raw_all(self.spark, root, schema, fmt=fmt)
         )
-        return parse_envelope(raw.drop(*PARTITION_COLS), self.payload_schema)
+        return flatten_payload(raw, PAYLOAD_COL)
 
     def rebuild_snapshot(self, as_of: dt.date) -> DataFrame:
         """Point-in-time rollback: the snapshot as it stood after
@@ -89,11 +111,14 @@ class CdcPipeline:
         """
         assert self.spec.data_dir
         raw = read_raw_through(
-            self.spark, self.spec.data_dir, as_of, fmt=self.spec.fmt
+            self.spark,
+            self.spec.data_dir,
+            as_of,
+            self.raw_schema,
+            fmt=self.spec.fmt,
         )
-        changes = parse_envelope(raw.drop(*PARTITION_COLS), self.payload_schema)
         return apply_changes(
-            changes,
+            flatten_payload(raw, PAYLOAD_COL),
             list(self.spec.primary_keys),
             list(self.spec.order_by),
             self.spec.merge_policy,
@@ -102,7 +127,8 @@ class CdcPipeline:
     # -- stage 2/3 ----------------------------------------------------------
     def merge_day(self, day: dt.date | None, table: str) -> None:
         """Merge one day of changes into a snapshot table (creates the
-        table on first run — reference bootstrap, done with DDL here)."""
+        table on first run — reference bootstrap, done with one
+        ``saveAsTable`` here)."""
         changes = self.changes_for(day)
         pk = list(self.spec.primary_keys)
         order = list(self.spec.order_by)

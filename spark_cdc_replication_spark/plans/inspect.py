@@ -29,11 +29,16 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
+def read_schemas(df: DataFrame) -> list[str]:
+    """Columns actually read by each file scan, in plan order."""
+    chunks = executed_plan(df).split("ReadSchema: ")[1:]
+    return [c.splitlines()[0] for c in chunks]
+
+
 def read_schema(df: DataFrame) -> str:
-    """Columns actually read from the source (pruning check)."""
-    plan = executed_plan(df)
-    parts = plan.split("ReadSchema: ")
-    return parts[1].splitlines()[0] if len(parts) > 1 else ""
+    """Columns actually read from the source (pruning check) — the
+    first scan's; see :func:`read_schemas` for a plan with several."""
+    return next(iter(read_schemas(df)), "")
 
 
 def count_exchanges(df: DataFrame) -> int:

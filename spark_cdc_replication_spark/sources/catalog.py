@@ -7,8 +7,9 @@ limit(1)+TRUNCATE bootstrap / tmp-table lineage-break dance:
   (``/root/reference/pipelines/daily_data_handler.py:76``) -> the
   public ``spark.catalog.tableExists``.
 * bootstrap-by-sample (write 1 row, TRUNCATE, to register schema —
-  ``daily_data_handler.py:157-162``) -> ``CREATE TABLE`` DDL from the
-  DataFrame schema.
+  ``daily_data_handler.py:157-162``) -> one ``saveAsTable`` of the
+  first snapshot (``pipeline.merge_day``), which registers the schema
+  and writes the data in the same step.
 * self-overwrite via ``_tmp`` table + refresh + read-back + overwrite +
   TRUNCATE (``daily_data_handler.py:141-155``) -> a staging table with
   an atomic-rename promote.  The reference's sequence has a data-loss
@@ -28,12 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 def table_exists(spark: SparkSession, table: str) -> bool:
     return spark.catalog.tableExists(table)
-
-
-def create_table_like(spark: SparkSession, table: str, df: DataFrame) -> None:
-    """Register an empty managed table with the frame's schema."""
-    empty = spark.createDataFrame([], df.schema)
-    empty.write.saveAsTable(table)
 
 
 def overwrite_table(spark: SparkSession, df: DataFrame, table: str) -> None:

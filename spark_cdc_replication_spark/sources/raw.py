@@ -9,7 +9,19 @@ Kafka -> ``(timestamp, value)`` -> ORC files partitioned by
 
 Our re-expression:
 
-* the landing projection is :func:`with_partition_cols` — pure columns;
+* the layout is ``(timestamp, value, payload, op_year, op_month,
+  op_day)``: ``value`` is the Debezium JSON string byte for byte (the
+  raw layer stays raw — there is no option to drop it), and
+  ``payload`` is that string parsed ONCE, at landing, with the
+  registry schema (:func:`landing_projection`).  The reference's ORC
+  raw layer keeps only the JSON, and every stage re-parses it on each
+  read of the layer; here every read — each tick's daily merge, every
+  point-in-time replay — flattens typed columns instead, scans no
+  ``value`` bytes, and runs no ``from_json``.  The trade is bytes at
+  landing (the payload is stored twice, once as text and once
+  columnar) for parse CPU on every read;
+* every read passes :func:`raw_schema` of the registry schema, so
+  planning reads no file footers;
 * the scan is :func:`read_raw_day` — read the ROOT and filter on the
   partition columns, so Catalyst's ``PruneFileSourcePartitions`` does
   the pruning (no path math, and a missing day is an empty DataFrame,
@@ -17,6 +29,20 @@ Our re-expression:
   ``daily_data_handler.py:39-41``);
 * Kafka itself is swappable for a file/rate source in tests — anything
   producing ``(timestamp, value)``.
+
+Schema drift, with ``payload`` fixed at landing:
+
+* a field added to the registry after a row landed reads NULL for that
+  row (what ``from_json`` gives on JSON that lacks the field);
+* a field the producer sent before the registry knew it is kept only
+  in ``value`` — re-land the affected days to recover it;
+* a changed field type fails at read time on parquet; ORC instead
+  converts the stored value by its own schema-evolution rules (a long
+  read as a string gives its digits), so a type change on an ORC root
+  calls for re-landing just the same;
+* a root landed with the JSON-only layout (no ``payload`` column) must
+  be re-landed: there is no compatibility read path, and every read
+  and landing refuses such a root (:func:`require_raw_layout`).
 """
 
 from __future__ import annotations
@@ -24,10 +50,48 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from ..functions.names import INGEST_TS
 
 PARTITION_COLS = ("op_year", "op_month", "op_day")
+#: The typed payload column: ``from_json(value, <registry schema>)``.
+PAYLOAD_COL = "payload"
+
+
+def raw_schema(payload_schema: StructType) -> StructType:
+    """The raw layer's full schema for one payload schema — what every
+    pipeline read passes, so planning infers nothing from footers."""
+    return StructType(
+        [
+            StructField(INGEST_TS, TimestampType()),
+            StructField("value", StringType()),
+            StructField(PAYLOAD_COL, payload_schema),
+            *[StructField(c, IntegerType()) for c in PARTITION_COLS],
+        ]
+    )
+
+
+def landing_projection(envelope: DataFrame, payload_schema: StructType) -> DataFrame:
+    """Typed ``(timestamp, value)`` envelope -> ``(timestamp, value,
+    payload)``: the JSON kept verbatim and parsed once into ``payload``
+    (the partition columns come from :func:`with_partition_cols`).  The
+    parse is PERMISSIVE: a malformed payload, or a field missing from
+    the JSON, lands NULL."""
+    return envelope.select(
+        INGEST_TS,
+        "value",
+        F.from_json("value", payload_schema).alias(PAYLOAD_COL),
+    )
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -41,8 +105,9 @@ def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
 
 
 def land_batch(df: DataFrame, data_dir: str, fmt: str = "parquet") -> None:
-    """Append one batch to the partitioned raw layer (reference K1,
-    ``raw_data_handler.py:77-87``)."""
+    """Append one batch, partitioned by ingest day (reference K1,
+    ``raw_data_handler.py:77-87``).  A CDC envelope lands in the raw
+    layout when passed through :func:`landing_projection` first."""
     (
         with_partition_cols(df)
         .write.partitionBy(*PARTITION_COLS)
@@ -52,30 +117,84 @@ def land_batch(df: DataFrame, data_dir: str, fmt: str = "parquet") -> None:
     )
 
 
+#: Roots whose layout :func:`require_raw_layout` has accepted in this
+#: process.  Every file landed from here on carries ``payload``, so one
+#: check per root and process suffices — and inferring a parquet root's
+#: schema runs a Spark job, too dear to repeat on every hourly read.
+_CHECKED_ROOTS: set[str] = set()
+
+
+def require_raw_layout(spark: SparkSession, data_dir: str, fmt: str) -> None:
+    """Raise if ``data_dir`` holds files landed in the JSON-only layout.
+
+    Reads pass an explicit schema, and parquet and ORC fill a column a
+    file lacks with NULL — so such files would read as NULL-keyed
+    changes that the merge drops without a word.  Landing into such a
+    root would mix the layouts.  The check infers the landed schema
+    from the root's files (one footer), once per root and process; a
+    root that does not exist yet, or holds no files, passes."""
+    if data_dir in _CHECKED_ROOTS:
+        return
+    root = spark._jvm.org.apache.hadoop.fs.Path(data_dir)
+    if root.getFileSystem(spark._jsc.hadoopConfiguration()).exists(root):
+        try:
+            landed = spark.read.format(fmt).load(data_dir).schema.fieldNames()
+        except AnalysisException:  # no data files to infer from yet
+            landed = [PAYLOAD_COL]
+        if PAYLOAD_COL not in landed:
+            raise ValueError(
+                f"{data_dir} holds raw files without a {PAYLOAD_COL!r} "
+                "column (the JSON-only layout); re-land it into a fresh "
+                "data_dir and ckpt_dir"
+            )
+    _CHECKED_ROOTS.add(data_dir)
+
+
+def _load(
+    spark: SparkSession, data_dir: str, schema: StructType, fmt: str
+) -> DataFrame:
+    require_raw_layout(spark, data_dir, fmt)
+    return spark.read.format(fmt).schema(schema).load(data_dir)
+
+
 def read_raw_day(
-    spark: SparkSession, data_dir: str, day: dt.date, fmt: str = "parquet"
+    spark: SparkSession,
+    data_dir: str,
+    day: dt.date,
+    schema: StructType,
+    fmt: str = "parquet",
 ) -> DataFrame:
     """Read exactly one ingest-day partition via partition-column
     filters (Catalyst prunes to the single directory — check
     ``.explain`` shows ``PartitionFilters``).  Returns an empty frame
-    (correct schema) for a missing day instead of raising."""
-    df = spark.read.format(fmt).load(data_dir)
-    return df.filter(
+    (correct schema) for a missing day instead of raising.  ``schema``
+    is :func:`raw_schema` of the registry schema, so planning reads no
+    footers."""
+    return _load(spark, data_dir, schema, fmt).filter(
         (F.col("op_year") == day.year)
         & (F.col("op_month") == day.month)
         & (F.col("op_day") == day.day)
     )
 
 
-def read_raw_all(spark: SparkSession, data_dir: str, fmt: str = "parquet") -> DataFrame:
+def read_raw_all(
+    spark: SparkSession,
+    data_dir: str,
+    schema: StructType,
+    fmt: str = "parquet",
+) -> DataFrame:
     """Bootstrap scan of every partition (reference S3,
     ``history_data_handler.py:77-81`` — which globs ``{dir}/*``; we
     just read the root)."""
-    return spark.read.format(fmt).load(data_dir)
+    return _load(spark, data_dir, schema, fmt)
 
 
 def read_raw_through(
-    spark: SparkSession, data_dir: str, as_of: dt.date, fmt: str = "parquet"
+    spark: SparkSession,
+    data_dir: str,
+    as_of: dt.date,
+    schema: StructType,
+    fmt: str = "parquet",
 ) -> DataFrame:
     """Read every ingest-day partition up to and including ``as_of`` —
     the point-in-time replay scan (the reference's bootstrap glob,
@@ -87,7 +206,7 @@ def read_raw_through(
     directories — days after ``as_of`` are never listed into the scan
     (plan- and inputFiles-asserted in ``tests/test_pipeline_e2e.py``).
     """
-    df = spark.read.format(fmt).load(data_dir)
+    df = _load(spark, data_dir, schema, fmt)
     y, m, d = as_of.year, as_of.month, as_of.day
     cutoff = (F.col("op_year") < y) | (
         (F.col("op_year") == y)
@@ -116,7 +235,10 @@ def compact_day(
     ``ceil(day_bytes / target_file_bytes)`` files via a round-robin
     ``repartition`` (no keys: compaction must not skew), using dynamic
     partition overwrite so ONLY the rewritten day is replaced — other
-    days' files are untouched.  Returns the file count written.
+    days' files are untouched.  The day's files are read with their
+    schemas merged, so a day that spans payload-schema versions keeps
+    every landed field.  Returns the file count written (0 for a day
+    with no files).
 
     **Streaming-landed roots must be sealed first.**  The file-sink
     transaction log (``_spark_metadata``) is the AUTHORITATIVE file
@@ -157,12 +279,20 @@ def compact_day(
         fs.delete(meta, True)
         spark.catalog.refreshByPath(data_dir)
 
-    day_df = read_raw_day(spark, data_dir, day, fmt=fmt)
-    total = 0
-    for f in day_df.inputFiles():
-        if "op_year=" in f:
-            p = hpath(f)
-            total += p.getFileSystem(jconf).getFileStatus(p).getLen()
+    values = (day.year, day.month, day.day)
+    day_dir = hpath(root, "/".join(f"{c}={v}" for c, v in zip(PARTITION_COLS, values)))
+    if not fs.exists(day_dir):
+        return 0
+    # the day's files may have landed under different payload schemas:
+    # read them with their footers merged, so the rewrite keeps every
+    # landed field (one footer's schema would drop the others')
+    day_df = (
+        spark.read.option("basePath", data_dir)
+        .option("mergeSchema", "true")
+        .format(fmt)
+        .load(day_dir.toString())
+    )
+    total = sum(fs.getFileStatus(hpath(f)).getLen() for f in day_df.inputFiles())
     n_files = max(1, math.ceil(total / target_file_bytes))
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -12,6 +12,17 @@ Two fixes, per SURVEY.md §2.10:
   the native file sink commits files transactionally per epoch
   (exactly-once on restart from the same checkpoint).
 
+The stream also parses each payload ONCE, with the registry schema,
+and lands it next to the JSON it came from: the sink writes the raw
+layout ``(timestamp, value, payload, op_year, op_month, op_day)`` of
+:mod:`..sources.raw` (:func:`~..sources.raw.landing_projection`).  The
+reference's ORC raw layer holds only the JSON, which every later read
+parses again; here the parse happens in the landing micro-batch and
+every read of the layer gets typed columns.  ``value`` is kept
+verbatim, so a field the registry did not yet know is recoverable by
+re-landing.  Roots landed in the JSON-only layout must be re-landed;
+the stream refuses to land into one.
+
 The source is pluggable: anything that yields ``(timestamp, value)``
 — ``spark.readStream.format("kafka")…`` in production (options as in
 ``raw_data_handler.py:36-44``), a file stream in tests.
@@ -21,9 +32,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..operators.cdc_parse import decode_envelope
-from ..sources.raw import PARTITION_COLS, with_partition_cols
+from ..sources.raw import (
+    PARTITION_COLS,
+    landing_projection,
+    require_raw_layout,
+    with_partition_cols,
+)
 
 
 def kafka_stream(
@@ -72,6 +89,7 @@ def file_stream(
 
 def land_stream(
     envelope: DataFrame,
+    payload_schema: StructType,
     data_dir: str,
     checkpoint_dir: str,
     fmt: str = "parquet",
@@ -82,10 +100,14 @@ def land_stream(
     Append mode, checkpointed, bounded by ``availableNow`` — run it on
     a schedule exactly like the reference's hourly Airflow trigger
     (``cdc_ingestion_dag.py:20``), or pass ``available_now=False`` for
-    a continuous stream.
+    a continuous stream.  ``payload_schema`` is the registry schema
+    each payload is parsed with on its way in.  A root that already
+    holds JSON-only files is refused before the stream starts, so the
+    two layouts never mix (:func:`~..sources.raw.require_raw_layout`).
     """
+    require_raw_layout(envelope.sparkSession, data_dir, fmt)
     writer = (
-        with_partition_cols(decode_envelope(envelope))
+        with_partition_cols(landing_projection(decode_envelope(envelope), payload_schema))
         .writeStream.format(fmt)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)

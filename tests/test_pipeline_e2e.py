@@ -5,16 +5,28 @@ tier 2/3)."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import json
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from spark_cdc_replication_spark.config import TableSpec
 from spark_cdc_replication_spark.fixtures import CDC_PAYLOAD_SCHEMA, cdc_envelope
 from spark_cdc_replication_spark.pipeline import CdcPipeline
-from spark_cdc_replication_spark.sources.raw import read_raw_day, read_raw_through
+from spark_cdc_replication_spark.plans.inspect import executed_plan, read_schemas
+from spark_cdc_replication_spark.sources import catalog
+from spark_cdc_replication_spark.sources.raw import (
+    compact_day,
+    land_batch,
+    landing_projection,
+    raw_schema,
+    read_raw_all,
+    read_raw_day,
+    read_raw_through,
+)
 
 
 @pytest.fixture()
@@ -73,7 +85,9 @@ def test_land_partitions_and_exactly_once(spark, sf_dir, pipe, tmp_path):
     # partition columns materialized hive-style
     assert {"op_year", "op_month", "op_day"} <= set(raw.columns)
     # a day read is partition-pruned, non-empty, and misses nothing
-    day = read_raw_day(spark, pipe.spec.data_dir, dt.date(2024, 1, 5), fmt=fmt)
+    day = read_raw_day(
+        spark, pipe.spec.data_dir, dt.date(2024, 1, 5), pipe.raw_schema, fmt=fmt
+    )
     assert day.count() > 0
     plan = day._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
@@ -109,7 +123,7 @@ def test_full_pipeline_matches_golden_fold(spark, sf_dir, pipe, tmp_path):
 
 
 def test_rebuild_snapshot_replays_pruned_and_matches_golden(
-    spark, sf_dir, pipe, tmp_path
+    spark, sf_dir, pipe, tmp_path, monkeypatch
 ):
     """Point-in-time rollback: rebuild_snapshot(as_of) over the landed
     raw layer must equal the golden fold of events through that day,
@@ -123,7 +137,7 @@ def test_rebuild_snapshot_replays_pruned_and_matches_golden(
     # partition pruning: the day cutoff rides the partition columns, so
     # it lands in PartitionFilters (applied at file LISTING time), not
     # the data filters — days past as_of are never listed into the scan
-    raw = read_raw_through(spark, pipe.spec.data_dir, as_of)
+    raw = read_raw_through(spark, pipe.spec.data_dir, as_of, pipe.raw_schema)
     plan = raw._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     # (the plan string elides long expressions, so check the prefix)
@@ -134,11 +148,175 @@ def test_rebuild_snapshot_replays_pruned_and_matches_golden(
         F.max(F.struct("op_year", "op_month", "op_day")).alias("m")
     ).collect()[0].m
     assert dt.date(mx.op_year, mx.op_month, mx.op_day) <= as_of
+    # parsed once, at landing: the replay and the daily merge's write
+    # flatten the typed payload — no from_json, and the raw scan never
+    # reads the JSON string
+    assert "from_json" not in executed_plan(snap)
+    [raw_scan] = read_schemas(snap)
+    assert raw_scan.startswith("struct<timestamp:timestamp,payload:struct<")
+    assert "value:string" not in raw_scan
+    written = []
+    real_overwrite = catalog.overwrite_table
+
+    def capture(spark_, df, table_):
+        written.append(df)
+        real_overwrite(spark_, df, table_)
+
+    table = "cdc_e2e_plan_pin"
+    for t in (table, f"{table}__staging"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    pipe.merge_day(dt.date(2024, 1, 5), table)
+    monkeypatch.setattr(catalog, "overwrite_table", capture)
+    pipe.merge_day(dt.date(2024, 1, 6), table)
+    [merged] = written
+    assert "from_json" not in executed_plan(merged)
+    scans = read_schemas(merged)  # the snapshot table and the raw layer
+    assert any(s.startswith("struct<timestamp:timestamp,payload:struct<") for s in scans)
+    assert all("value:string" not in s for s in scans)
+
+
+#: A payload schema and its successor with one added field.
+PAYLOAD_V1 = StructType(
+    [
+        StructField("id", StringType()),
+        StructField("event_id", LongType()),
+        StructField("__op", StringType()),
+    ]
+)
+PAYLOAD_V2 = StructType([*PAYLOAD_V1.fields, StructField("k", StringType())])
+#: Envelopes landed under v1: the producer already sends ``k``, which
+#: the v1 registry does not know.  Then envelopes landed under v2, one
+#: of them on the same day as the v1 rows.
+ENVELOPES_V1 = [
+    ("2024-01-01 01:00:00", '{"id":"a","event_id":1,"__op":"c","k":"early"}'),
+    ("2024-01-01 02:00:00", '{"id":"b","event_id":2,"__op":"c","k":"early"}'),
+]
+ENVELOPES_V2 = [
+    ("2024-01-01 03:00:00", '{"id":"c","event_id":3,"__op":"c","k":"x"}'),
+    ("2024-01-02 01:00:00", '{"id":"b","event_id":4,"__op":"u","k":"y"}'),
+]
+
+
+def land_envelopes(spark, root: str, fmt: str, rows, schema: StructType) -> None:
+    env = spark.createDataFrame(rows, "timestamp string, value string").select(
+        F.col("timestamp").cast("timestamp"), "value"
+    )
+    land_batch(landing_projection(env, schema), root, fmt=fmt)
+
+
+def land_two_versions(spark, root: str, fmt: str) -> None:
+    land_envelopes(spark, root, fmt, ENVELOPES_V1, PAYLOAD_V1)
+    land_envelopes(spark, root, fmt, ENVELOPES_V2, PAYLOAD_V2)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_replay_across_payload_schema_versions(spark, tmp_path, fmt):
+    """A root holding files landed under a v1 and a v2 payload schema
+    replays under v2: the v1 rows read NULL for the added field, even
+    where their JSON carried it, and ``value`` is the envelope string
+    byte for byte."""
+    root = str(tmp_path / "raw")
+    land_two_versions(spark, root, fmt)
+    spec = TableSpec(
+        name="drift", primary_keys=("id",), order_by=("timestamp", "event_id"),
+        data_dir=root, fmt=fmt,
+    )
+    pipe = CdcPipeline(spark, spec, PAYLOAD_V2)
+
+    def snapshot(as_of):
+        snap = pipe.rebuild_snapshot(as_of)
+        return {(r.id, r.event_id, r.k) for r in snap.collect()}
+
+    assert snapshot(dt.date(2024, 1, 1)) == {("a", 1, None), ("b", 2, None), ("c", 3, "x")}
+    assert snapshot(dt.date(2024, 1, 2)) == {("a", 1, None), ("b", 4, "y"), ("c", 3, "x")}
+    raw = read_raw_all(spark, root, pipe.raw_schema, fmt)
+    assert sorted(r.value for r in raw.collect()) == sorted(
+        v for _, v in ENVELOPES_V1 + ENVELOPES_V2
+    )
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_compact_day_keeps_fields_of_every_payload_version(spark, tmp_path, fmt):
+    """Compacting a day whose files span payload schemas writes one
+    file that carries the union of their fields, with every row's
+    payload and ``value`` unchanged.  A third schema with a field of
+    its own lands too, so no single file's schema holds every field."""
+    root = str(tmp_path / "raw")
+    land_two_versions(spark, root, fmt)
+    note = StructField("note", StringType())
+    land_envelopes(
+        spark, root, fmt,
+        [("2024-01-01 04:00:00", '{"id":"d","event_id":5,"__op":"c","note":"n"}')],
+        StructType([*PAYLOAD_V1.fields, note]),
+    )
+    day = dt.date(2024, 1, 1)
+    union = StructType([*PAYLOAD_V2.fields, note])
+    schema = raw_schema(union)
+
+    def day_rows():
+        return {
+            (r.value, r.payload.id, r.payload.event_id, r.payload.k, r.payload.note)
+            for r in read_raw_day(spark, root, day, schema, fmt).collect()
+        }
+
+    before = day_rows()
+    assert len(before) == 4
+    assert compact_day(spark, root, day, target_file_bytes=10**9, fmt=fmt) == 1
+    assert day_rows() == before
+    [compacted] = glob.glob(f"{root}/op_year=2024/op_month=1/op_day=1/*.{fmt}")
+    landed = spark.read.format(fmt).load(compacted).schema["payload"].dataType
+    assert sorted(landed.fieldNames()) == sorted(union.fieldNames())
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_changed_payload_field_type_at_read(spark, tmp_path, fmt):
+    """A registry that changes a landed field's type: parquet fails the
+    read; ORC applies its own schema-evolution conversion instead."""
+    root = str(tmp_path / "raw")
+    land_two_versions(spark, root, fmt)
+    retyped = StructType(
+        [StructField(f.name, StringType() if f.name == "event_id" else f.dataType)
+         for f in PAYLOAD_V2.fields]
+    )
+    raw = read_raw_all(spark, root, raw_schema(retyped), fmt)
+    if fmt == "parquet":
+        with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH|cannot be converted"):
+            raw.select("payload.event_id").collect()
+    else:
+        got = {r.event_id for r in raw.select("payload.event_id").collect()}
+        assert got == {"1", "2", "3", "4"}
+
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_json_only_root_is_refused(spark, tmp_path, fmt):
+    """A root landed in the JSON-only layout, ``(timestamp, value)``
+    plus the partition columns, has no ``payload``: an explicit-schema
+    read would turn its rows into NULL changes the merge drops, and a
+    new landing would mix the layouts.  Reads and landing raise."""
+    root = str(tmp_path / "raw")
+    env = spark.createDataFrame(ENVELOPES_V1, "timestamp string, value string")
+    land_batch(env.select(F.col("timestamp").cast("timestamp"), "value"), root, fmt=fmt)
+    spec = TableSpec(
+        name="json_only", primary_keys=("id",), order_by=("timestamp", "event_id"),
+        data_dir=root, ckpt_dir=str(tmp_path / "ckpt"), fmt=fmt,
+    )
+    pipe = CdcPipeline(spark, spec, PAYLOAD_V1)
+    with pytest.raises(ValueError, match="re-land"):
+        pipe.rebuild_snapshot(dt.date(2024, 1, 1))
+    with pytest.raises(ValueError, match="re-land"):
+        pipe.changes_for(dt.date(2024, 1, 1))
+    (tmp_path / "incoming").mkdir()
+    stream = spark.readStream.schema("timestamp timestamp, value string").parquet(
+        str(tmp_path / "incoming")
+    )
+    with pytest.raises(ValueError, match="re-land"):
+        pipe.land(stream)
 
 
 def test_missing_day_is_empty_not_error(spark, sf_dir, pipe, tmp_path):
     land_all(spark, sf_dir, pipe, tmp_path)
-    df = read_raw_day(spark, pipe.spec.data_dir, dt.date(2030, 12, 25))
+    df = read_raw_day(spark, pipe.spec.data_dir, dt.date(2030, 12, 25), pipe.raw_schema)
     assert df.count() == 0
 
 
