@@ -18,88 +18,88 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: The driver's correctness gate checks the FIRST 50 registry entries
 #: in insertion order, so which queries earn a driver-green row each
 #: round is a deliberate rotation, not an accident of module order.
-#: Round-18 window (every name must carry a full rows+schema+hash
+#: Round-19 window (every name must carry a full rows+schema+hash
 #: oracle; tools/check_coverage.py enforces >=1 in-window entry per
 #: operator family AND a <=2-round staleness bound per oracle query
 #: against the CORRECTNESS_r*.json history):
 #:
-#: * the 44 queries whose last driver-green row is r15 — at the
+#: * the 44 queries whose last driver-green row is r16 — at the
 #:   staleness bound, exactly what `tools/check_coverage.py --plan`
 #:   printed under "MANDATORY for THIS round" once
-#:   CORRECTNESS_r17.json landed: mandatory, all in;
-#: * no debut this round (r18 is the second OPTIMIZATION round — no
-#:   new features; the staged-debut pipeline resumes with the next
-#:   build round);
-#: * 6 r16-greens pulled forward from the due-next pool, chosen to
-#:   driver-certify exactly the paths this optimization round
-#:   touches: `text_filter_corpus` is the hygiene-filter operator
-#:   being rewritten onto the Arrow boundary (VERDICT r17 item 1)
-#:   and `prepare_corpus_served` its composed streaming-parity
-#:   consumer; `text_bm25_topk` and `similarity_hybrid_rrf` cover the
-#:   BM25 serve-path action-count work (item 7);
-#:   `dedup_corpus_weighted` is the heaviest dedup headline line
-#:   (consumer of any CC/verify change); `q1_pricing_summary` is the
-#:   r17-regressed analytics line, so any q1 adjudication this round
-#:   lands with a fresh driver-green row.
+#:   CORRECTNESS_r18.json landed: mandatory, all in;
+#: * no debut this round (new queries are in scope only when they
+#:   replace existing code);
+#: * 6 r17-greens pulled forward from the due-next pool:
+#:   `prepare_corpus` holds the hygiene-pipeline family floor (none
+#:   of the 44 is in that family) and earns the direct driver row it
+#:   lost when it rotated out in the round its filter was rewritten;
+#:   `cdc_merge_incremental`, `cdc_snapshot_asof` and
+#:   `cdc_increment_append` read through
+#:   `operators/cdc_parse.parse_envelope`, re-composed for the typed
+#:   raw layer (payload parsed once, at landing) after their last
+#:   driver-green row; `cdc_raw_partition_stats` covers that raw
+#:   layer's partition columns; `rollup_incremental` is the open
+#:   chained-fold regression, so any change to it lands with a fresh
+#:   driver-green row.
 #:
 #: The steady 3-round cycle over the 144-oracle registry: each
 #: round's window = the r-3 leftovers (mandatory) + as many r-2
 #: greens as fit + any never-green debuts + semantics-changed
 #: re-earners.
 GATE_WINDOW: tuple[str, ...] = (
-    # at the staleness bound — last driver-green r15 (44, mandatory)
-    "approx_distinct_bound",
-    "approx_percentile_bound",
-    "asof_purchase_view",
-    "cdc_coalesce_updates",
-    "cdc_json_flatten",
-    "cdc_name_sanitize",
-    "cdc_route_ops",
-    "cdc_union_dedup",
-    "chunk_documents",
-    "clean_corpus",
-    "cohort_retention",
-    "corpus_shuffle",
-    "corpus_stats",
-    "cube_revenue",
-    "customer_deciles",
-    "daily_revenue_trend",
-    "decontaminate_corpus",
-    "dedup_containment",
-    "dedup_minhash_verified",
-    "dedup_simhash_verified",
-    "embedding_label_centroids",
-    "events_tumbling_6h",
-    "fuzzy_join_parts",
-    "multimodal_audio_vad",
-    "multimodal_frames",
-    "pii_prevalence",
-    "q10_returned_revenue",
-    "q21_waiting_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_revenue_forecast",
-    "rollup_revenue",
-    "sample_quality_weighted",
-    "sample_stratified",
-    "similarity_hybrid_rrf_ivf_all",
-    "similarity_pq_all",
-    "split_assign",
-    "split_cluster_safe",
-    "text_fingerprints",
-    "text_lang_stats",
-    "text_repetition",
-    "text_stats",
-    "tfidf_top_terms",
-    "top_orders_per_customer",
-    # 6 r16-greens pulled forward (r19 mandatory shrinks; chosen to
-    # certify the operators this optimization round touches, see above)
-    "text_filter_corpus",
-    "prepare_corpus_served",
-    "text_bm25_topk",
-    "similarity_hybrid_rrf",
-    "dedup_corpus_weighted",
-    "q1_pricing_summary",
+    # at the staleness bound — last driver-green r16 (44, mandatory)
+    "cdc_antijoin_survivors",
+    "cdc_last_writer_wins",
+    "cdc_snapshot_merge",
+    "dedup_corpus",
+    "dedup_exact",
+    "dedup_representatives",
+    "embedding_outliers",
+    "embedding_project",
+    "embedding_separation",
+    "events_anomaly_days",
+    "events_drift_psi",
+    "events_hopping_6h_2h",
+    "events_sessionize",
+    "funnel_conversion",
+    "multimodal_resize",
+    "pack_padding_waste",
+    "pack_sequences",
+    "pii_ldiversity",
+    "pii_scrub",
+    "pivot_status_revenue",
+    "q2_best_supplier_per_part",
+    "q4_order_priority",
+    "q8_market_share",
+    "q9_product_profit",
+    "range_join_signup_views",
+    "sample_importance",
+    "sample_importance_weights",
+    "sample_mixture_temperature",
+    "sample_quality_bands",
+    "sample_token_budget",
+    "similarity_hard_negatives",
+    "similarity_ivf_all",
+    "similarity_ivf_int8_all",
+    "similarity_knn_label",
+    "split_temporal",
+    "text_bigram_logprob",
+    "text_contamination",
+    "text_language_id",
+    "text_line_dedup",
+    "text_quality_calibrate_binned",
+    "text_quality_score",
+    "top_words_salted",
+    "user_behavior_topk",
+    "validate_orders",
+    # 6 r17-greens pulled forward (r20 mandatory shrinks; chosen for
+    # the family floor and the raw-layer re-composition, see above)
+    "prepare_corpus",
+    "cdc_merge_incremental",
+    "cdc_snapshot_asof",
+    "cdc_increment_append",
+    "cdc_raw_partition_stats",
+    "rollup_incremental",
 )
 
 

@@ -24,10 +24,15 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+#: the repo root (parent of ``tools/``): the history, COVERAGE.md and
+#: ``__spark_entry__`` are found there whatever the working directory
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, REPO_ROOT)
 
 #: family -> query-name prefixes; each family must have >=1 registered
 #: query with an oracle.  Names mirror SURVEY.md §2 (cdc/analytics/
@@ -70,7 +75,9 @@ FAMILIES: dict[str, tuple[str, ...]] = {
 MAX_STALE_ROUNDS = 2
 
 
-def load_history(pattern: str = "CORRECTNESS_r*.json") -> dict[int, set[str]]:
+def load_history(
+    pattern: str = os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"),
+) -> dict[int, set[str]]:
     """round number -> names with a fully-green row (rows+schema+hash)."""
     hist: dict[int, set[str]] = {}
     for path in glob.glob(pattern):
@@ -247,7 +254,7 @@ def main() -> int:
             print("  ", s)
         rc = 1
 
-    text = open("COVERAGE.md").read()
+    text = open(os.path.join(REPO_ROOT, "COVERAGE.md")).read()
     tokens = set(re.findall(r"[a-z0-9_]+", text))
 
     def documented(n: str) -> bool:
