@@ -49,8 +49,6 @@ HEADLINE = [
     "similarity_topk",
     "similarity_ivf_topk",
     "similarity_ivf_int8",
-    # PQ must precede similarity_hard_negatives_ivf: release_indexes
-    # fires there and now also evicts the PQ code table
     "similarity_pq_topk",
     "text_stats",
     "text_language_id",
@@ -181,14 +179,9 @@ def main() -> None:
     # the parsed-CDC-change cache (consumed by 3 CDC queries) and the
     # IVF inverted file (a persisted artifact at scale, maintained by
     # streaming/index_stream.py — the steady-state cost is the probe).
-    from spark_cdc_replication_spark.workloads.cdc import release_changes, warm_changes
-    from spark_cdc_replication_spark.workloads.llmdata import (
-        release_dsir_weights,
-        release_indexes,
-        release_pq_indexes,
-        release_sigs,
-        warm_indexes,
-    )
+    from spark_cdc_replication_spark.sources.artifacts import release
+    from spark_cdc_replication_spark.workloads.cdc import warm_changes
+    from spark_cdc_replication_spark.workloads.llmdata import warm_indexes
 
     warm_changes(spark, sf_dir)
     warm_indexes(spark, sf_dir)
@@ -215,21 +208,15 @@ def main() -> None:
     # Warm state is released right after its LAST headline consumer so
     # persisted blocks don't pressure storage memory for the rest of
     # the run (round 3 saw a uniform ~1.25x drift on unchanged queries
-    # under accumulated warm state).
+    # under accumulated warm state).  Releasing a kind also releases
+    # the kinds built from it (``sources/artifacts.py``), so releasing
+    # "pq" drops IVF-PQ too and "ivf" drops IVF-int8, never PQ.
     release_after = {
-        "cdc_increment_append": release_changes,
-        "dedup_minhash_lsh": release_sigs,
-        # the LAST _IVF_INDEX consumer is now the IVF hard-negative
-        # miner (r7) — releasing after similarity_ivf_int8 would evict
-        # the index mid-bench, silently retrain it inside the miner's
-        # timed region, and leave the rebuilt blocks persisted for
-        # every later headline query (code review r7).
-        "similarity_hard_negatives_ivf": release_indexes,
-        # the PQ tiers' last consumer comes well before the IVF
-        # index's — release them separately (code review r8)
-        "similarity_pq_topk": release_pq_indexes,
-        # the DSIR weights store's last consumer (r10)
-        "sample_importance": release_dsir_weights,
+        "cdc_increment_append": "changes",
+        "dedup_minhash_lsh": "minhash_sigs",
+        "similarity_pq_topk": "pq",
+        "similarity_hard_negatives_ivf": "ivf",
+        "sample_importance": "dsir_weights",
     }
 
     # Each query is timed as min-of-RUNS so a one-off GC pause / session
@@ -250,7 +237,7 @@ def main() -> None:
         if n == 0:
             print(f"WARN: {name} returned 0 rows", file=sys.stderr)
         if name in release_after:
-            release_after[name](spark, sf_dir)
+            release(spark, sf_dir, release_after[name])
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -19,35 +19,10 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Filter expressions that reached the file source scan."""
-    plan = executed_plan(df)
-    out: list[str] = []
-    for chunk in plan.split("PushedFilters: [")[1:]:
-        body = chunk.split("]")[0]
-        out.extend(s.strip() for s in body.split(",") if s.strip())
-    return out
-
-
 def read_schemas(df: DataFrame) -> list[str]:
     """Columns actually read by each file scan, in plan order."""
     chunks = executed_plan(df).split("ReadSchema: ")[1:]
     return [c.splitlines()[0] for c in chunks]
-
-
-def read_schema(df: DataFrame) -> str:
-    """Columns actually read from the source (pruning check) — the
-    first scan's; see :func:`read_schemas` for a plan with several."""
-    return next(iter(read_schemas(df)), "")
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """Shuffle count — the number a 100 TB review cares about most."""
-    return executed_plan(df).count("Exchange hashpartitioning")
-
-
-def count_broadcast_joins(df: DataFrame) -> int:
-    return executed_plan(df).count("BroadcastHashJoin")
 
 
 def final_plan(df: DataFrame) -> str:
@@ -59,11 +34,6 @@ def final_plan(df: DataFrame) -> str:
     df.collect()
     plan = executed_plan(df)
     return plan.split("== Initial Plan ==")[0]
-
-
-def has_cartesian(df: DataFrame) -> bool:
-    plan = executed_plan(df)
-    return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def count_table_scans(df: DataFrame, table_file: str) -> int:

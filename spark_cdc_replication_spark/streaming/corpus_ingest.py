@@ -117,11 +117,16 @@ def _dedup_batch_against_corpus(
     # within-batch winner: min id per fingerprint (exact_dedup's rule)
     w_min = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
     fresh = fp.join(w_min, ["fp", id_col], "left_semi")
-    try:
-        # the corpus carries its own index: prune to the fp column
-        index = spark.read.parquet(corpus_dir).select("fp")
-    except AnalysisException:
-        index = None  # first batch: corpus does not exist yet
+    # the corpus carries its own index: prune to the fp column.  Probe
+    # for the root first: reading a missing path logs a
+    # FileNotFoundException trace even when the exception is caught.
+    index = None  # first batch: corpus does not exist yet
+    root = spark._jvm.org.apache.hadoop.fs.Path(corpus_dir)
+    if root.getFileSystem(spark._jsc.hadoopConfiguration()).exists(root):
+        try:
+            index = spark.read.parquet(corpus_dir).select("fp")
+        except AnalysisException:
+            pass  # the root exists but holds no data files yet
     if index is not None:
         fresh = fresh.join(index, "fp", "left_anti")
     if bench is not None and excise_opts is None:

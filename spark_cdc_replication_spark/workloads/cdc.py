@@ -19,6 +19,7 @@ from ..operators.merge import (
     latest_per_key,
     merge_snapshot,
 )
+from ..sources import artifacts
 
 PK = ["id"]
 ORDER = ["timestamp", "event_id"]
@@ -34,48 +35,31 @@ ops AS (
 """
 
 
-#: Parsed change batches per (session, corpus identity, filter) — the
-#: A3 pattern (cache before multi-consume): merge_snapshot consumes the
-#: batch two-to-three times (upserts, touched keys), and the three CDC
-#: headline queries share it; without this, the envelope synth + JSON
-#: parse re-executes for every consumer.  Values are ``(version, df)``
-#: where version = events.parquet mtime+size: a rewritten fixture
-#: replaces the entry AND unpersists the stale one, so a long-lived
-#: session never leaks storage memory across fixture rewrites.
-_CHANGES_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
-
-
 def _changes(spark: SparkSession, sf_dir: str, where: str | None = None) -> DataFrame:
-    """envelope -> parsed change rows (P1+P3+P5+S6 path), persisted.
+    """envelope -> parsed change rows (P1+P3+P5+S6 path), persisted in
+    the artifact store (``sources/artifacts.py``) — the A3 pattern
+    (cache before multi-consume): merge_snapshot consumes the batch
+    two-to-three times (upserts, touched keys), and the CDC headline
+    queries share it; without the store, the envelope synth + JSON
+    parse re-executes for every consumer.
 
-    Only the UNFILTERED parse is cached; ``where`` is a predicate over
+    Only the UNFILTERED parse is stored; ``where`` is a predicate over
     the *parsed* columns (e.g. ``timestamp < '...'``) applied as a
     row-local filter on top of the persisted frame.  Every filtered
-    variant therefore reuses the one warmed cache instead of paying its
+    variant therefore reuses the one warmed frame instead of paying its
     own envelope-synth + JSON-parse + persist (round 3's
     ``cdc_merge_incremental`` regression was exactly two cold cache
     builds landing inside the timed region)."""
-    import os
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    ident = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    version = (st.st_mtime_ns, st.st_size)
-    hit = _CHANGES_CACHE.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[1].unpersist()  # evict-on-replace: release the stale blocks
-        hit = None
-    if hit is None:
-        hit = (
-            version,
-            parse_envelope(cdc_envelope(spark, sf_dir), CDC_PAYLOAD_SCHEMA).persist(),
-        )
-        _CHANGES_CACHE[ident] = hit
-    base = hit[1]
+    def build():
+        return parse_envelope(cdc_envelope(spark, sf_dir), CDC_PAYLOAD_SCHEMA).persist()
+
+    base = artifacts.get(spark, sf_dir, "changes", build)
     return base.where(where) if where else base
 
 
 def warm_changes(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the shared parsed-change cache outside any timed
+    """Materialize the shared parsed-change frame outside any timed
     region.  bench.py calls this in warm-up so the one-time envelope
     synth + JSON parse + persist() does not land in whichever headline
     query happens to run first (it skewed ``cdc_snapshot_merge`` +41%
@@ -83,21 +67,6 @@ def warm_changes(spark: SparkSession, sf_dir: str) -> None:
     plain filters over this same persisted frame, so this single warm
     covers them all."""
     _changes(spark, sf_dir).count()
-
-
-def release_changes(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist the shared parsed-change cache for ``sf_dir``.
-
-    bench.py calls this once the last CDC headline query has run, so
-    the blocks don't sit in storage memory pressuring the remaining
-    (unrelated) queries — round 3 saw a uniform ~1.25x drift on
-    unchanged queries that correlated with accumulated warm state."""
-    import os
-
-    ident = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _CHANGES_CACHE.pop(ident, None)
-    if hit is not None:
-        hit[1].unpersist()
 
 
 def _present(df: DataFrame) -> DataFrame:

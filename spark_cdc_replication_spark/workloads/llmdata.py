@@ -38,6 +38,7 @@ from ..operators.textanalysis import (
     quality_score,
     text_stats,
 )
+from ..sources import artifacts
 
 _STOPLIST_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 #: DuckDB twin of functions.text.words / normalized
@@ -86,49 +87,30 @@ GROUP BY {_NORM_SQL}
 """
 
 
-#: MinHash signature store per corpus identity — the same persisted-
-#: artifact pattern as ``_IVF_INDEX`` below: at 100 TB signatures are
-#: computed once per document at ingest (see ``streaming/
-#: corpus_ingest.py`` for the incremental analogue) and every dedup
-#: pass reads the store; rebuilding them per query would rescan the
-#: corpus.  16 hashes x 8 bands (r=2): signature hashing dominates the
-#: build cost, and halving the family from 32 keeps planted-dup recall
-#: at 1.0 (identical sigs collide in every band regardless of family
-#: size) while near-dup banding recall stays pinned by
-#: tests/test_dedup_similarity.py at this exact configuration.
-_MINHASH_SIGS: dict[tuple, tuple] = {}
-
-
-def _table_key(spark: SparkSession, sf_dir: str, table: str) -> tuple[tuple, tuple]:
-    import os
-
-    app = spark.sparkContext.applicationId
-    try:
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        return (app, sf_dir, table), (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (app, sf_dir, table), (None, None)
-
-
 def _corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ident, version = _table_key(spark, sf_dir, "documents")
-    hit = _MINHASH_SIGS.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[1].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    """MinHash signatures per document, kept in the artifact store
+    (``sources/artifacts.py``): at 100 TB signatures are computed once
+    per document at ingest (see ``streaming/corpus_ingest.py`` for the
+    incremental analogue) and every dedup pass reads the store;
+    rebuilding them per query would rescan the corpus.  16 hashes x 8
+    bands (r=2): signature hashing dominates the build cost, and
+    halving the family from 32 keeps planted-dup recall at 1.0
+    (identical sigs collide in every band regardless of family size)
+    while near-dup banding recall stays pinned by
+    tests/test_dedup_similarity.py at this exact configuration."""
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        sigs = minhash_signatures(docs, num_hashes=16, shingle_n=3).persist()
-        hit = (version, sigs)
-        _MINHASH_SIGS[ident] = hit
-    return hit[1]
+        return minhash_signatures(docs, num_hashes=16, shingle_n=3).persist()
+
+    return artifacts.get(spark, sf_dir, "minhash_sigs", build)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates (rows-only check: xxhash64 has
     no DuckDB twin).  Self-consistency is asserted in tests/ against
-    exact n-gram Jaccard.  Signatures come from the per-corpus store
-    (``_MINHASH_SIGS``): both sides of the LSH self-join and the
+    exact n-gram Jaccard.  Signatures come from the artifact store
+    (``_corpus_sigs``): both sides of the LSH self-join and the
     scoring re-join consume them, and at scale they are a persisted
     ingest-time artifact, not a per-query rebuild."""
     return minhash_lsh_candidates(
@@ -616,145 +598,76 @@ def q_similarity_lsh_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "neighbor_id", "rank")
 
 
-#: IVF index per corpus identity — (centroids, persisted cell-assigned
-#: corpus), built once and reused across query batches, exactly as a
-#: persisted index would be at scale.  Keyed on (app id, dir); the
-#: value carries the file mtime+size version: a rewritten corpus at the
-#: same path replaces the entry and unpersists the stale assignment, so
-#: a long-lived session never accumulates dead index blocks.
-_IVF_INDEX: dict[tuple, tuple] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    ident, version = _table_key(spark, sf_dir, "embeddings")
-    hit = _IVF_INDEX.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[2].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    """IVF index — (centroids, persisted cell-assigned corpus), built
+    once per corpus version and reused across query batches, exactly as
+    a persisted index would be at scale (``sources/artifacts.py``)."""
+
+    def build():
         cents = ivf_centroids(emb, num_centroids=16)
-        assigned = ivf_assign(emb, cents).persist()
-        hit = (version, cents, assigned)
-        _IVF_INDEX[ident] = hit
-    return hit[1], hit[2]
+        return cents, ivf_assign(emb, cents).persist()
 
-
-#: Int8-compressed IVF index (FAISS SQ8 analogue) — same persisted-
-#: artifact lifecycle as ``_IVF_INDEX``; shares its trained centroids.
-_IVF_INT8: dict[tuple, tuple] = {}
+    return artifacts.get(spark, sf_dir, "ivf", build)
 
 
 def _ivf_int8_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """Int8-compressed IVF index (FAISS SQ8 analogue) on the IVF
+    index's trained centroids."""
     from ..operators.similarity import ivf_assign_int8
 
-    ident, version = _table_key(spark, sf_dir, "embeddings")
-    hit = _IVF_INT8.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[2].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    def build():
         cents, _ = _ivf_index(spark, sf_dir, emb)
-        assigned8 = ivf_assign_int8(emb, cents).persist()
-        hit = (version, cents, assigned8)
-        _IVF_INT8[ident] = hit
-    return hit[1], hit[2]
+        return cents, ivf_assign_int8(emb, cents).persist()
 
-
-#: PQ code table (FAISS PQ/ADC analogue, the 32x-compression tier) —
-#: same persisted-artifact lifecycle as ``_IVF_INDEX``.
-_PQ_INDEX: dict[tuple, tuple] = {}
+    return artifacts.get(spark, sf_dir, "ivf_int8", build)
 
 
 def _pq_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """PQ code table (FAISS PQ/ADC analogue, the 32x-compression
+    tier): (codebooks, persisted codes)."""
     from ..operators.similarity import pq_codebooks, pq_encode
 
-    ident, version = _table_key(spark, sf_dir, "embeddings")
-    hit = _PQ_INDEX.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[2].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    def build():
         books = pq_codebooks(emb, num_subspaces=16, codes_per_subspace=16)
-        codes = pq_encode(emb, books).persist()
-        hit = (version, books, codes)
-        _PQ_INDEX[ident] = hit
-    return hit[1], hit[2]
+        return books, pq_encode(emb, books).persist()
 
-
-#: Combined IVF-PQ index (FAISS IVFPQ analogue): shares _IVF_INDEX's
-#: trained centroids and _PQ_INDEX's codebooks, stores one
-#: (neighbor_id, cell, code) table — same lifecycle as the others.
-_IVFPQ_INDEX: dict[tuple, tuple] = {}
+    return artifacts.get(spark, sf_dir, "pq", build)
 
 
 def _ivfpq_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """Combined IVF-PQ index (FAISS IVFPQ analogue): the IVF index's
+    centroids and the PQ codebooks, plus one persisted
+    (neighbor_id, cell, code) table."""
     from ..operators.similarity import ivfpq_assign
 
-    ident, version = _table_key(spark, sf_dir, "embeddings")
-    hit = _IVFPQ_INDEX.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[3].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    def build():
         cents, _ = _ivf_index(spark, sf_dir, emb)
         books, _ = _pq_index(spark, sf_dir, emb)
-        assigned = ivfpq_assign(emb, cents, books).persist()
-        hit = (version, cents, books, assigned)
-        _IVFPQ_INDEX[ident] = hit
-    return hit[1], hit[2], hit[3]
+        return cents, books, ivfpq_assign(emb, cents, books).persist()
 
-
-#: Persisted BM25 inverted index per corpus identity — an ON-DISK
-#: bucket-partitioned parquet directory (the exact layout
-#: ``streaming/token_index_stream.py`` maintains incrementally), plus
-#: the (N, avgdl) stats pair computed once per index version.  Same
-#: evict-on-replace lifecycle as ``_IVF_INDEX``; the directory path is
-#: a deterministic function of (corpus identity, file version) so
-#: repeated sessions overwrite rather than accumulate temp dirs.
-_TOKEN_INDEX: dict[tuple, tuple] = {}
+    return artifacts.get(spark, sf_dir, "ivfpq", build)
 
 
 def _token_index_store(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    """Persisted BM25 inverted index — an on-disk bucket-partitioned
+    parquet directory (the exact layout
+    ``streaming/token_index_stream.py`` maintains incrementally) and
+    the (N, avgdl) stats pair computed once per index version."""
     from ..operators.search import index_stats, token_index
 
-    import glob
-
-    ident, version = _table_key(spark, sf_dir, "documents")
-    hit = _TOKEN_INDEX.get(ident)
-    if hit is not None and hit[0] != version:
-        shutil.rmtree(hit[1], ignore_errors=True)  # corpus was rewritten
-        hit = None
-    if hit is None:
-        # Two-part tag: identity then version, so a fresh PROCESS (whose
-        # in-memory _TOKEN_INDEX is empty) can still find and remove a
-        # prior version's directory for the same corpus — without the
-        # sweep, every fixture rewrite orphaned one full index dir in
-        # the tempdir forever (code review r7).
-        ident_tag = hashlib.md5(repr(ident[1:]).encode()).hexdigest()[:12]
-        ver_tag = hashlib.md5(repr(version).encode()).hexdigest()[:12]
-        base = os.path.join(tempfile.gettempdir(), f"spark_graft_tokidx_{ident_tag}")
-        path = f"{base}_{ver_tag}"
-        for stale in glob.glob(f"{base}_*"):
-            if stale != path:
-                shutil.rmtree(stale, ignore_errors=True)
+    def build(path):
         docs = load_table(spark, sf_dir, "documents")
-        token_index(docs).write.partitionBy("bucket").mode("overwrite").parquet(path)
-        stats = index_stats(spark.read.parquet(path))
-        hit = (version, path, stats)
-        _TOKEN_INDEX[ident] = hit
-    return hit[1], hit[2]
+        token_index(docs).write.partitionBy("bucket").parquet(path)
+        return path, index_stats(spark.read.parquet(path))
+
+    return artifacts.get(spark, sf_dir, "token_index", build)
 
 
 def warm_indexes(spark: SparkSession, sf_dir: str) -> None:
     """Build + materialize the persisted-artifact state outside any
     timed region: the IVF inverted file (maintained incrementally by
     ``streaming/index_stream.py`` at scale), the MinHash signature
-    store (an ingest-time artifact, see ``_MINHASH_SIGS``), and the
+    store (an ingest-time artifact, see ``_corpus_sigs``), and the
     on-disk BM25 token index (maintained incrementally by
     ``streaming/token_index_stream.py``).  bench.py calls this in
     warm-up so ``similarity_ivf_topk`` times the PROBE,
@@ -775,49 +688,6 @@ def warm_indexes(spark: SparkSession, sf_dir: str) -> None:
     _corpus_sigs(spark, sf_dir).count()
     _token_index_store(spark, sf_dir)
     _dsir_weights(spark, sf_dir).count()
-
-
-def release_sigs(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist the MinHash signature store (bench hygiene: called
-    after the last headline consumer so storage memory doesn't bleed
-    into later queries' timings)."""
-    ident, _ = _table_key(spark, sf_dir, "documents")
-    hit = _MINHASH_SIGS.pop(ident, None)
-    if hit is not None:
-        hit[1].unpersist()
-
-
-def release_pq_indexes(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist only the PQ tiers (bench hygiene: their last headline
-    consumer is ``similarity_pq_topk``, several queries before
-    ``release_indexes`` fires for the IVF index the hard-negative
-    miner still needs — holding dead code-table blocks until then is
-    exactly the accumulated-warm-state pressure the release hooks
-    exist to prevent)."""
-    ident, _ = _table_key(spark, sf_dir, "embeddings")
-    for store in (_PQ_INDEX, _IVFPQ_INDEX):
-        hit = store.pop(ident, None)
-        if hit is not None:
-            hit[-1].unpersist()
-
-
-def release_dsir_weights(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist the DSIR weights store (bench hygiene: its last
-    headline consumer is ``sample_importance``)."""
-    ident, _ = _table_key(spark, sf_dir, "documents")
-    hit = _DSIR_WEIGHTS.pop(ident, None)
-    if hit is not None:
-        hit[1].unpersist()
-
-
-def release_indexes(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist the IVF inverted files and the PQ code table (bench
-    hygiene, as above)."""
-    ident, _ = _table_key(spark, sf_dir, "embeddings")
-    for store in (_IVF_INDEX, _IVF_INT8, _PQ_INDEX, _IVFPQ_INDEX):
-        hit = store.pop(ident, None)
-        if hit is not None:
-            hit[-1].unpersist()  # the persisted DataFrame is always last
 
 
 def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3137,34 +3007,25 @@ WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
 """
 
 
-_DSIR_WEIGHTS: dict[tuple, tuple] = {}
-
-
 def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted DSIR weights frame for the fixture's standard split
-    (target = 'src0', raw = the rest, 256 buckets) — the
-    ``_corpus_sigs`` materialize-once pattern: both DSIR queries and
+    (target = 'src0', raw = the rest, 256 buckets), kept in the
+    artifact store (``sources/artifacts.py``): both DSIR queries and
     any future consumer (different k / temperature) serve from ONE
     scoring pass per corpus version instead of re-tokenizing per
     query.  One row per raw doc (24 bytes of longs + the id), the same
     per-doc footprint the minhash-signature store already persists."""
     from ..operators.sampling import importance_weights
 
-    ident, version = _table_key(spark, sf_dir, "documents")
-    hit = _DSIR_WEIGHTS.get(ident)
-    if hit is not None and hit[0] != version:
-        hit[1].unpersist()  # evict-on-replace: corpus was rewritten
-        hit = None
-    if hit is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        w = importance_weights(
+        return importance_weights(
             docs.filter(F.col("source") != "src0"),
             docs.filter(F.col("source") == "src0"),
             num_buckets=256,
         ).select("doc_id", "n_tokens", "weight_micro").persist()
-        hit = (version, w)
-        _DSIR_WEIGHTS[ident] = hit
-    return hit[1]
+
+    return artifacts.get(spark, sf_dir, "dsir_weights", build)
 
 
 def q_sample_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3282,52 +3143,24 @@ def q_corpus_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DIVERGENCE_STORE: dict[tuple, tuple] = {}
-
-
 def _divergence_report_store(spark: SparkSession, sf_dir: str) -> str:
     """Committed streaming-divergence artifact root for the fixture —
-    the events `_drift_report_store` pattern on the documents table:
-    identity_version dir tag, stale-sibling sweep, clean-slate rebuild,
-    never cache a half-built root."""
-    import hashlib
+    the events ``_drift_report_store`` pattern on the documents table,
+    kept in the artifact store (``sources/artifacts.py``)."""
     import os
-    import shutil
-    import tempfile
-    from glob import glob
 
     from ..operators.sampling import dsir_bucket_counts
+    from ..streaming import finish_artifact_build
     from ..streaming.divergence_stream import divergence_stream
 
-    ident, version = _table_key(spark, sf_dir, "documents")
-    hit = _DIVERGENCE_STORE.get(ident)
-    if hit is not None and hit[0] != version:
-        shutil.rmtree(hit[1], ignore_errors=True)  # corpus was rewritten
-        hit = None
-    if hit is None:
-        ident_tag = hashlib.md5(repr(ident[1:]).encode()).hexdigest()[:12]
-        ver_tag = hashlib.md5(repr(version).encode()).hexdigest()[:12]
-        base = os.path.join(tempfile.gettempdir(), f"spark_graft_jsd_{ident_tag}")
-        root = f"{base}_{ver_tag}"
-        for stale in glob(f"{base}_*"):
-            if stale != root:
-                shutil.rmtree(stale, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         docs = load_table(spark, sf_dir, "documents")
         tgt_counts = dsir_bucket_counts(
             docs.filter(F.col("source") == "src0"), 256
         )
-        # The file-stream source takes a DIRECTORY; the fixture is a
-        # single parquet file, so stage it (unmodified) under the root.
-        src = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isfile(src):
-            land = os.path.join(root, "src")
-            os.makedirs(land, exist_ok=True)
-            shutil.copy(src, os.path.join(land, "documents.parquet"))
-            src = land
         stream = (
             spark.readStream.schema(docs.schema)
-            .parquet(src)
+            .parquet(artifacts.stage_table(sf_dir, "documents", root))
             .select("doc_id", "source", "text")
         )
         q = divergence_stream(
@@ -3338,14 +3171,10 @@ def _divergence_report_store(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             num_buckets=256,
         )
-        from ..streaming import finish_artifact_build
-
-        # never cache (or serve) a half-built artifact root — timeout
-        # AND streaming-error paths both clean it (r11 ADVICE)
         finish_artifact_build(q, root, what="divergence artifact")
-        hit = (version, root)
-        _DIVERGENCE_STORE[ident] = hit
-    return hit[1]
+        return root
+
+    return artifacts.get(spark, sf_dir, "divergence", build)
 
 
 def q_corpus_divergence_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4174,14 +4003,10 @@ def q_prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HYGIENE_STORE: dict[tuple, tuple] = {}
-
-
 def _hygiene_corpus_store(spark: SparkSession, sf_dir: str) -> str:
     """Committed streaming-hygiene corpus root for the fixture — the
-    ``_divergence_report_store`` pattern on ``corpus_dedup_stream``:
-    identity-version dir tag, stale-sibling sweep, clean-slate rebuild,
-    never cache a half-built root.
+    ``_divergence_report_store`` pattern on ``corpus_dedup_stream``,
+    kept in the artifact store (``sources/artifacts.py``).
 
     The synthesized train corpus (q_prepare_corpus's exact recipe) is
     landed as ONE parquet file so ``availableNow`` packs a single
@@ -4192,28 +4017,12 @@ def _hygiene_corpus_store(spark: SparkSession, sf_dir: str) -> str:
     survivors on this fixture (where every planted near-dup normalizes
     away, LSH-at-0.999 dedup ≡ exact-fingerprint dedup — the same
     equivalence ORACLE_PREPARE_CORPUS itself relies on)."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
-    from glob import glob
 
+    from ..streaming import finish_artifact_build
     from ..streaming.corpus_ingest import corpus_dedup_stream
 
-    ident, version = _table_key(spark, sf_dir, "documents")
-    hit = _HYGIENE_STORE.get(ident)
-    if hit is not None and hit[0] != version:
-        shutil.rmtree(hit[1], ignore_errors=True)  # corpus was rewritten
-        hit = None
-    if hit is None:
-        ident_tag = hashlib.md5(repr(ident[1:]).encode()).hexdigest()[:12]
-        ver_tag = hashlib.md5(repr(version).encode()).hexdigest()[:12]
-        base = os.path.join(tempfile.gettempdir(), f"spark_graft_hyg_{ident_tag}")
-        root = f"{base}_{ver_tag}"
-        for stale in glob(f"{base}_*"):
-            if stale != root:
-                shutil.rmtree(stale, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         bench = docs.filter(F.col("doc_id") % 50 == 0)
         base_docs = docs.filter(F.col("doc_id") % 50 != 0)
@@ -4253,16 +4062,12 @@ def _hygiene_corpus_store(spark: SparkSession, sf_dir: str) -> str:
                     max_top_bigram_frac=0.2,
                 ),
             )
-            from ..streaming import finish_artifact_build
-
-            # never cache (or serve) a half-built root — timeout AND
-            # streaming-error paths both clean it (r11 ADVICE)
             finish_artifact_build(q, root, what="hygiene artifact")
         finally:
             bench_p.unpersist()
-        hit = (version, root)
-        _HYGIENE_STORE[ident] = hit
-    return hit[1]
+        return root
+
+    return artifacts.get(spark, sf_dir, "hygiene", build)
 
 
 def q_prepare_corpus_served(spark: SparkSession, sf_dir: str) -> DataFrame:

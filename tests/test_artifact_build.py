@@ -1,14 +1,23 @@
-"""`finish_artifact_build` teardown contract (r11 ADVICE): the
-artifact root must never outlive a failed build, and a timed-out
-query must be fully terminated BEFORE the root is deleted (stop() is
-asynchronous — deleting first can race in-flight stream writers)."""
+"""Artifact lifecycle.
+
+`finish_artifact_build` teardown contract (r11 ADVICE): the artifact
+root must never outlive a failed build, and a timed-out query must be
+fully terminated BEFORE the root is deleted (stop() is asynchronous —
+deleting first can race in-flight stream writers).
+
+The artifact store (`sources/artifacts.py`): identity, version-based
+eviction, dependency-aware release and failed builds, checked with
+fake builds over tiny tables so no Spark job runs."""
 
 from __future__ import annotations
 
 import os
+import tempfile
+from glob import glob
 
 import pytest
 
+from spark_cdc_replication_spark.sources import artifacts
 from spark_cdc_replication_spark.streaming import finish_artifact_build
 
 
@@ -90,3 +99,117 @@ def test_streaming_error_cleans_root_and_reraises(tmp_path):
     # the half-built root must not linger for a later session to
     # mistake for a committed artifact
     assert not os.path.exists(root)
+
+
+# --------------------------------------------------------------------------
+# artifact store
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture
+def sf(spark, tmp_path, monkeypatch):
+    """A source dir with tiny ``documents``/``embeddings`` tables; on-disk
+    roots go under ``tmp_path`` and every entry is released afterwards."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for table in ("documents", "embeddings"):
+        (sf / f"{table}.parquet").write_bytes(b"v1")
+    yield sf
+    for kind in artifacts.KINDS:
+        artifacts.release(spark, str(sf), kind)
+
+
+def _frame(spark, built, kind):
+    def build():
+        built.append(kind)
+        return ([0.0], spark.range(1).persist())
+
+    return build
+
+
+def _fill_root(built, kind="token_index"):
+    def build(root):
+        built.append(kind)
+        os.makedirs(root)
+        open(os.path.join(root, "part.parquet"), "w").close()
+        return root
+
+    return build
+
+
+def test_rewritten_table_evicts_artifact_and_dependents(spark, sf):
+    built: list[str] = []
+    old = {
+        kind: artifacts.get(spark, str(sf), kind, _frame(spark, built, kind))
+        for kind in ("ivf", "ivf_int8", "ivfpq")
+    }
+    old_root = artifacts.get(spark, str(sf), "token_index", _fill_root(built))
+    assert all(v[1].is_cached for v in old.values())
+
+    for table in ("documents", "embeddings"):
+        (sf / f"{table}.parquet").write_bytes(b"version 2")
+    new = artifacts.get(spark, str(sf), "ivf", _frame(spark, built, "ivf"))
+    # the IVF entry and both indexes built on its centroids are gone
+    assert not any(v[1].is_cached for v in old.values())
+    assert new[1].is_cached
+    new_root = artifacts.get(spark, str(sf), "token_index", _fill_root(built))
+    assert not os.path.exists(old_root)
+    assert os.path.isdir(new_root) and new_root != old_root
+    assert built == ["ivf", "ivf_int8", "ivfpq", "token_index", "ivf", "token_index"]
+
+
+def test_release_ivf_drops_its_dependents_and_keeps_pq(spark, sf):
+    built: list[str] = []
+    kinds = ("ivf", "ivf_int8", "pq", "ivfpq")
+    old = {k: artifacts.get(spark, str(sf), k, _frame(spark, built, k)) for k in kinds}
+    artifacts.release(spark, str(sf), "ivf")
+    assert [k for k in kinds if old[k][1].is_cached] == ["pq"]
+    built.clear()
+    for k in kinds:
+        artifacts.get(spark, str(sf), k, _frame(spark, built, k))
+    assert built == ["ivf", "ivf_int8", "ivfpq"]
+
+
+def test_failed_build_leaves_no_entry_and_no_root(spark, sf):
+    roots: list[str] = []
+
+    def fail_on_disk(root):
+        roots.append(root)
+        _fill_root([])(root)
+        raise RuntimeError("build failed")
+
+    def fail_in_memory():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        artifacts.get(spark, str(sf), "divergence", fail_on_disk)
+    assert not os.path.exists(roots[0])
+    with pytest.raises(RuntimeError, match="build failed"):
+        artifacts.get(spark, str(sf), "dsir_weights", fail_in_memory)
+    built: list[str] = []
+    artifacts.get(spark, str(sf), "divergence", _fill_root(built, "divergence"))
+    artifacts.get(spark, str(sf), "dsir_weights", _frame(spark, built, "dsir_weights"))
+    assert built == ["divergence", "dsir_weights"]
+
+
+def test_one_entry_and_root_per_absolute_dir(spark, sf, tmp_path, monkeypatch):
+    """A relative and an absolute spelling of one dir share the entry and
+    the root; the same relative spelling from another working dir names
+    another table, and its build must not sweep the first one's root."""
+    built: list[str] = []
+    monkeypatch.chdir(tmp_path)
+    root = artifacts.get(spark, "sf", "token_index", _fill_root(built))
+    assert artifacts.get(spark, str(sf), "token_index", _fill_root(built)) == root
+    assert built == ["token_index"]
+    assert glob(root.rsplit("_", 1)[0] + "_*") == [root]
+
+    other = tmp_path / "elsewhere"
+    (other / "sf").mkdir(parents=True)
+    (other / "sf" / "documents.parquet").write_bytes(b"v1")
+    monkeypatch.chdir(other)
+    other_root = artifacts.get(spark, "sf", "token_index", _fill_root(built))
+    assert other_root != root
+    assert os.path.isdir(root) and os.path.isdir(other_root)
+    artifacts.release(spark, "sf", "token_index")
+    assert not os.path.exists(other_root)
