@@ -1372,8 +1372,14 @@ def dup_clusters(
     )
     changed = None
     for _ in range(max_iters):
+        # NULL-dst edges filtered, then a NULL-safe key: the plain
+        # equi-join's rows, but the join infers no isnotnull(node)
+        # filter into the labels side, so round 1's two references to
+        # the init aggregate stay identical and share one exchange
+        # (the ReusedExchange test_plans pins).
         prop = (
-            edges.join(labels, edges.dst == labels.node)
+            edges.where(edges.dst.isNotNull())
+            .join(labels, edges.dst.eqNullSafe(labels.node))
             .select(F.col("src").alias("node"), "label", F.lit(False).alias("__own"))
         )
         merged = labels.withColumn("__own", F.lit(True)).unionByName(prop)

@@ -128,11 +128,17 @@ class CdcPipeline:
     def merge_day(self, day: dt.date | None, table: str) -> None:
         """Merge one day of changes into a snapshot table (creates the
         table on first run — reference bootstrap, done with one
-        ``saveAsTable`` here)."""
+        ``saveAsTable`` here).  A table that an interrupted promote left
+        only under its staging name is renamed back first
+        (``catalog.restore_staging``); a present table costs no extra
+        catalog call."""
         changes = self.changes_for(day)
         pk = list(self.spec.primary_keys)
         order = list(self.spec.order_by)
-        if not catalog.table_exists(self.spark, table):
+        exists = catalog.table_exists(self.spark, table) or catalog.restore_staging(
+            self.spark, table
+        )
+        if not exists:
             snapshot = apply_changes(changes, pk, order, self.spec.merge_policy)
             snapshot.write.saveAsTable(table)
             return

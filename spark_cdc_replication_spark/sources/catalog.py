@@ -31,6 +31,10 @@ def table_exists(spark: SparkSession, table: str) -> bool:
     return spark.catalog.tableExists(table)
 
 
+def _staging(table: str) -> str:
+    return f"{table}__staging"
+
+
 def overwrite_table(spark: SparkSession, df: DataFrame, table: str) -> None:
     """Overwrite ``table`` with ``df`` even when ``df`` reads from it.
 
@@ -40,19 +44,33 @@ def overwrite_table(spark: SparkSession, df: DataFrame, table: str) -> None:
     promoted via drop + rename.  The old table stays readable for the
     whole duration of the big write; the remaining exposure is the
     instant between the final DROP and RENAME (two catalog calls, not
-    atomic in the Hive catalog) — a crash exactly there leaves the data
-    complete but only under the ``__staging`` name, recoverable with a
-    manual RENAME.  That window is metadata-only and sub-second,
+    atomic in the Hive catalog).  A crash exactly there leaves the data
+    complete but only under the ``__staging`` name, and the next
+    ``pipeline.merge_day`` on the table renames it back
+    (:func:`restore_staging`) before it would bootstrap a new one —
     vs the reference's variant where the target is TRUNCATEd before the
     data write even starts (``daily_data_handler.py:141-155``).  On a
     catalog with ``CREATE OR REPLACE TABLE ... AS SELECT`` (Delta,
     Iceberg), use that for a fully atomic swap.
     """
-    staging = f"{table}__staging"
+    staging = _staging(table)
     spark.sql(f"DROP TABLE IF EXISTS {staging}")
     df.write.mode("overwrite").saveAsTable(staging)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+
+
+def restore_staging(spark: SparkSession, table: str) -> bool:
+    """Finish a promote that :func:`overwrite_table` left between its
+    DROP and RENAME: for a missing ``table`` whose staging table exists,
+    rename the staging table back and return True.  Without this, the
+    next run would bootstrap ``table`` from one day's changes, and the
+    promote after it would drop the staging table, the only full copy."""
+    staging = _staging(table)
+    if not table_exists(spark, staging):
+        return False
+    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    return True
 
 
 def append_table(df: DataFrame, table: str, partition_by: tuple[str, ...] = ()) -> None:

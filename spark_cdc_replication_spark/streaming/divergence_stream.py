@@ -29,32 +29,10 @@ Tokenization/hashing is :func:`~..operators.sampling
 .dsir_bucket_counts` on BOTH sides — batch and stream share one
 token model by construction, the ``drift_from_counts`` lesson.
 
-Epoch commit protocol — identical to ``drift_stream``'s (counts
-first, report second, reader takes the largest epoch present in BOTH,
-replay overwrites both), but the per-batch replay fingerprint is
-CONTENT-bound, not profile-bound: per group, the batch's row count
-plus an exact decimal sum of a per-row ``md5(group || text)`` prefix
-(order- and partition-independent).  A replayed batch id carrying
-different documents (a wiped checkpoint re-packing source files under
-old ids) RAISES instead of silently double-counting — even when the
-re-pack happens to reproduce the old batch's aggregated
-(group, bucket, count) profile, the collision the bucket-count
-fingerprint could not see (r10 ADVICE); a bit-identical replay is a
-no-op.
-
-FORMAT BREAK (deliberate, r11): the fingerprint moved from the
-profile-bound ``counts_dir/batch={id}`` frame to the content-bound
-``counts_dir/fp={id}`` frame.  Replaying against a counts/report/
-checkpoint trio committed by the PRE-r11 monitor raises "no stored
-fingerprint" even for a bit-identical replay — loud, and in the safe
-direction (refuse rather than risk double-counting), but it means old
-trios cannot be resumed in place.  There is intentionally NO fallback
-to the legacy ``batch={id}`` profile: the profile is exactly the
-fingerprint whose collision window the r10 ADVICE flagged, so
-honoring it would silently downgrade the guarantee on the replays
-that need it most.  Migration: start a fresh trio (the monitor
-rebuilds its bounded state from the stream), or re-run the legacy
-monitor version to drain in-flight epochs first.
+Both are committed, counts first, under the epoch protocol of
+``sources/versions.py``, through the additive-count fold the drift
+monitor uses (``drift_stream.count_fold``); read the report with
+``versions.read_latest(spark, [counts_dir, report_dir])[1]``.
 
 Scale: state is ``groups x num_buckets`` BIGINTs (the DSIR bounded-
 model property carried into streaming); per batch, only the batch's
@@ -63,63 +41,12 @@ own map-side-partial count scales with its row count.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sampling import divergence_from_counts, dsir_bucket_counts
-from .rollup_stream import latest_epoch
-
-
-def _content_fingerprint(
-    batch: DataFrame, group_col: str, text_col: str
-) -> DataFrame:
-    """Per-group content checksum for the replay guard: row count plus
-    an EXACT ``decimal(38,0)`` sum of the first 14 md5 hex digits of
-    ``group || 0x1f || text`` per row (56 bits/row — no overflow at any
-    realistic batch size, and decimal addition commutes, so the value
-    is independent of row order and partitioning).
-
-    Binding to the documents themselves rather than to the aggregated
-    (group, bucket, count) profile closes the r10 ADVICE collision: two
-    different corpora can share a bucket-count profile, but a matching
-    per-row hash sum + count means matching content up to md5-prefix
-    collision odds.  (group, text) is the full input of the maintained
-    state, so fingerprinting exactly those columns is content-complete.
-    Known (harmless) equivalence: ``concat_ws`` skips NULLs, so a
-    NULL-text row fingerprints like an empty-text row — both carry zero
-    tokens through ``dsir_bucket_counts``, so batches differing only in
-    that distinction commit identical state anyway.
-    """
-    row_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "\x1f", F.col(group_col).cast("string"), F.col(text_col)
-                )
-            ),
-            1,
-            14,
-        ),
-        16,
-        10,
-    ).cast("decimal(38,0)")
-    return batch.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("__rows"),
-        F.sum(row_hash).cast("decimal(38,0)").alias("__csum"),
-    )
-
-
-def read_divergence_report(
-    spark: SparkSession, counts_dir: str, report_dir: str
-) -> DataFrame:
-    """Latest committed divergence report (largest epoch in BOTH dirs)."""
-    e = latest_epoch(counts_dir, report_dir)
-    if e is None:
-        raise FileNotFoundError(f"no committed epoch under {report_dir}")
-    return spark.read.parquet(os.path.join(report_dir, f"epoch={e}"))
+from ..sources import versions
+from .drift_stream import count_fold
 
 
 def divergence_stream(
@@ -142,89 +69,14 @@ def divergence_stream(
     target model.
     """
     tgt = target_counts.select("__b", "__n")
-
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = latest_epoch(counts_dir, report_dir)
-        batch_counts = dsir_bucket_counts(
-            batch, num_buckets, text_col, (group_col,)
-        )
-        fp_path = os.path.join(counts_dir, f"fp={batch_id}")
-        if prev is not None and prev >= batch_id:
-            # Duplicate delivery of an already-committed epoch id: the
-            # id alone does not prove the content matches (a wiped
-            # checkpoint may re-pack source files under old ids), so
-            # compare against the stored CONTENT fingerprint — count +
-            # per-row hash sum per group, not the bucket-count profile
-            # (two different corpora can share a profile; r10 ADVICE) —
-            # and only then no-op.
-            try:
-                stored = {
-                    (r[group_col], r["__rows"], r["__csum"])
-                    for r in spark.read.parquet(fp_path).collect()
-                }
-            except Exception as exc:
-                raise RuntimeError(
-                    f"divergence_stream: replayed batch {batch_id} has no "
-                    f"stored fingerprint under {counts_dir} — either the "
-                    "checkpoint was wiped with a different source packing, "
-                    "or this trio was committed by the pre-r11 monitor "
-                    "(profile fingerprints under batch={id}; see the module "
-                    "docstring's FORMAT BREAK note). Start a fresh "
-                    "counts/report/checkpoint trio instead"
-                ) from exc
-            current = {
-                (r[group_col], r["__rows"], r["__csum"])
-                for r in _content_fingerprint(batch, group_col, text_col).collect()
-            }
-            if current != stored:
-                raise RuntimeError(
-                    f"divergence_stream: replayed batch {batch_id} carries "
-                    "different data than the committed epoch; the epoch "
-                    "guard is only safe while the checkpoint is preserved — "
-                    "start a fresh counts/report/checkpoint trio"
-                )
-            return  # content-identical replay: a true no-op
-        # Fingerprint FIRST (only consulted for ids <= the committed
-        # frontier; a crash between fingerprint and counts overwrites
-        # harmlessly on replay), then the batch's own counts — written
-        # once and read back so the merge consumes a materialized frame
-        # instead of re-evaluating the tokenize lineage.
-        _content_fingerprint(batch, group_col, text_col).write.mode(
-            "overwrite"
-        ).parquet(fp_path)
-        counts_path = os.path.join(counts_dir, f"batch={batch_id}")
-        batch_counts.write.mode("overwrite").parquet(counts_path)
-        batch_counts = spark.read.parquet(counts_path)
-        if prev is None:
-            counts = batch_counts
-        else:
-            old = spark.read.parquet(os.path.join(counts_dir, f"epoch={prev}"))
-            counts = (
-                old.select(group_col, "__b", F.col("__n").alias("__old"))
-                .join(batch_counts, [group_col, "__b"], "full_outer")
-                .select(
-                    group_col,
-                    "__b",
-                    (
-                        F.coalesce("__old", F.lit(0)) + F.coalesce("__n", F.lit(0))
-                    ).alias("__n"),
-                )
-            )
-        # counts first, report second: the reader's frontier moves only
-        # once both exist; a replayed epoch overwrites both.
-        counts.write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"epoch={batch_id}")
-        )
-        merged = spark.read.parquet(os.path.join(counts_dir, f"epoch={batch_id}"))
-        divergence_from_counts(
-            merged, tgt, num_buckets, group_col=group_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(report_dir, f"epoch={batch_id}")
-        )
-
-    writer = docs.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    fold = count_fold(
+        lambda batch: dsir_bucket_counts(batch, num_buckets, text_col, (group_col,)),
+        [group_col, "__b"],
+        "__n",
+        lambda counts: divergence_from_counts(
+            counts, tgt, num_buckets, group_col=group_col
+        ),
     )
-    trigger = {"availableNow": True} if available_now else {}
-    return writer.trigger(**trigger).start()
+    return versions.start(
+        docs, [counts_dir, report_dir], checkpoint_dir, fold, available_now
+    )

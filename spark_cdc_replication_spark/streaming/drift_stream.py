@@ -6,7 +6,7 @@ A stream of rows maintains TWO artifacts per epoch:
 
 * the **observed counts** (category -> running count over everything
   streamed so far) — additive IVM: each epoch adds the batch's
-  per-category counts to the previous epoch's (full outer join + sum),
+  per-category counts to the previous epoch's (:func:`count_fold`),
   O(|batch categories| + |seen categories|) and dimension-bounded, and
 * the **drift report** vs a PINNED reference distribution (the
   training-corpus / last-known-good composition, passed as a
@@ -17,29 +17,9 @@ A stream of rows maintains TWO artifacts per epoch:
   union(batches so far))`` exactly (pinned in
   ``tests/test_drift_stream.py``).
 
-Epoch commit protocol — identical to ``rollup_stream``'s (counts
-first, report second, reader takes the largest epoch present in BOTH,
-replay overwrites both): exactly-once artifacts under
-``foreachBatch``'s at-least-once contract.  Each epoch additionally
-stores the batch's OWN category counts as a fingerprint
-(``counts_dir/batch=<id>``, invisible to the epoch reader): a replayed
-batch id whose content differs from what was committed — a wiped
-checkpoint re-packing source files under old ids — RAISES instead of
-silently dropping the new rows (ADVICE r7); a bit-identical replay
-remains a no-op.
-
-Collision window of THIS guard, explicitly: the fingerprint is the
-batch's aggregated category-count profile, so a re-pack whose batch
-happens to reproduce the committed batch's exact per-category counts
-passes as a replay even if the underlying rows differ.  For THIS
-monitor that is benign for the epoch itself — the maintained state is
-exactly those counts, so the no-op leaves state identical to
-re-processing — but rows shuffled ACROSS the re-packed batch boundary
-can then double-count in later epochs.  The divergence monitor
-(``divergence_stream``), whose per-group corpora make profile
-collisions more plausible, binds its guard to content (per-row hash
-sum + count) instead; port ``_content_fingerprint`` here if a
-deployment replays re-packed event feeds against preserved artifacts.
+Both are committed, counts first, under the epoch protocol of
+``sources/versions.py``; read the report with
+``versions.read_latest(spark, [counts_dir, report_dir])[1]``.
 
 Scale: the only state is the category-count relation (bytes per
 distinct category); the report is the same size.  Nothing here scales
@@ -50,24 +30,52 @@ pinned-reference shape is the standard production monitor: alert when
 
 from __future__ import annotations
 
-import os
+from functools import reduce
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.validate import drift_from_counts
-from .rollup_stream import latest_epoch
+from ..sources import versions
 
 
-def read_drift_report(
-    spark: SparkSession, counts_dir: str, report_dir: str
-) -> DataFrame:
-    """Latest committed drift report (largest epoch in BOTH dirs)."""
-    e = latest_epoch(counts_dir, report_dir)
-    if e is None:
-        raise FileNotFoundError(f"no committed epoch under {report_dir}")
-    return spark.read.parquet(os.path.join(report_dir, f"epoch={e}"))
+def count_fold(
+    batch_counts: Callable[[DataFrame], DataFrame],
+    keys: Sequence[str],
+    n_col: str,
+    report: Callable[[DataFrame], DataFrame],
+) -> versions.Fold:
+    """The additive-count fold of the drift and divergence monitors.
+
+    The epoch's counts are the previous epoch's plus
+    ``batch_counts(batch)``: a full outer join on ``keys`` (NULL-safe,
+    so a NULL key stays one row) and a coalesced sum of ``n_col``.  The
+    report is ``report`` of those counts, read back once written."""
+
+    def fold(batch, prev):
+        counts = batch_counts(batch)
+        if prev is not None:
+            old = prev[0].select(
+                *[F.col(k).alias(f"__old_{k}") for k in keys],
+                F.col(n_col).alias("__old_n"),
+            )
+            on = reduce(
+                lambda a, b: a & b,
+                [old[f"__old_{k}"].eqNullSafe(counts[k]) for k in keys],
+            )
+            counts = old.join(counts, on, "full_outer").select(
+                *[F.coalesce(counts[k], old[f"__old_{k}"]).alias(k) for k in keys],
+                (
+                    F.coalesce("__old_n", F.lit(0))
+                    + F.coalesce(counts[n_col], F.lit(0))
+                ).alias(n_col),
+            )
+        merged = yield counts
+        yield report(merged)
+
+    return fold
 
 
 def drift_stream(
@@ -89,76 +97,14 @@ def drift_stream(
     the reference is cohort *a*, the stream cohort *b*.
     """
     ref = reference_counts.select("category", "n")
-
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = latest_epoch(counts_dir, report_dir)
-        batch_counts = batch.groupBy(F.col(col).alias("category")).agg(
+    fold = count_fold(
+        lambda batch: batch.groupBy(F.col(col).alias("category")).agg(
             F.count(F.lit(1)).alias("n")
-        )
-        fp_path = os.path.join(counts_dir, f"batch={batch_id}")
-        if prev is not None and prev >= batch_id:
-            # Duplicate delivery of an already-committed epoch id.  The
-            # id alone does NOT prove the content matches: after a
-            # checkpoint wipe the source may re-pack files into
-            # different batches under the same ids (ADVICE r7), and
-            # silently skipping would drop the new rows.  Compare
-            # against the per-epoch batch fingerprint (the batch's OWN
-            # category counts, bytes per category) and only then no-op.
-            try:
-                stored = {
-                    (r["category"], r["n"])
-                    for r in spark.read.parquet(fp_path).collect()
-                }
-            except Exception as exc:
-                raise RuntimeError(
-                    f"drift_stream: replayed batch {batch_id} has no stored "
-                    f"fingerprint under {counts_dir} — checkpoint was wiped "
-                    "with a different source packing; start a fresh "
-                    "counts/report/checkpoint trio instead"
-                ) from exc
-            current = {(r["category"], r["n"]) for r in batch_counts.collect()}
-            if current != stored:
-                raise RuntimeError(
-                    f"drift_stream: replayed batch {batch_id} carries "
-                    f"different data than the committed epoch (stored "
-                    f"{sorted(stored, key=repr)} != replayed "
-                    f"{sorted(current, key=repr)}); the epoch guard is only "
-                    "safe while the checkpoint is preserved — start a fresh "
-                    "counts/report/checkpoint trio"
-                )
-            return  # bit-identical replay: a true no-op
-        # Fingerprint FIRST: it's only consulted for ids <= the committed
-        # frontier, so an uncommitted epoch's fingerprint is harmless and
-        # a crash between fingerprint and counts just overwrites on replay.
-        batch_counts.write.mode("overwrite").parquet(fp_path)
-        batch_counts = spark.read.parquet(fp_path)
-        if prev is None:
-            counts = batch_counts
-        else:
-            old = spark.read.parquet(os.path.join(counts_dir, f"epoch={prev}"))
-            counts = (
-                old.select("category", F.col("n").alias("__old"))
-                .join(batch_counts, "category", "full_outer")
-                .select(
-                    "category",
-                    (
-                        F.coalesce("__old", F.lit(0)) + F.coalesce("n", F.lit(0))
-                    ).alias("n"),
-                )
-            )
-        # counts first, report second: the reader's frontier moves
-        # only once both exist; a replayed epoch overwrites both.
-        counts.write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"epoch={batch_id}")
-        )
-        new_counts = spark.read.parquet(os.path.join(counts_dir, f"epoch={batch_id}"))
-        drift_from_counts(ref, new_counts, smooth=smooth).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(report_dir, f"epoch={batch_id}"))
-
-    writer = rows.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        ["category"],
+        "n",
+        lambda counts: drift_from_counts(ref, counts, smooth=smooth),
     )
-    trigger = {"availableNow": True} if available_now else {}
-    return writer.trigger(**trigger).start()
+    return versions.start(
+        rows, [counts_dir, report_dir], checkpoint_dir, fold, available_now
+    )

@@ -10,14 +10,12 @@ A stream of parsed CDC change rows maintains TWO artifacts per epoch:
   count + sums), advanced by counting-IVM signed deltas — O(batch),
   never recomputed from the snapshot.
 
-Epoch commit protocol (exactly-once under ``foreachBatch``'s
-at-least-once contract): each epoch OVERWRITES
-``<dir>/epoch=<batchId>`` for both artifacts — snapshot first, rollup
-second — and a reader takes the largest epoch present in BOTH.  A
-crash between the two writes leaves the previous epoch current; the
-replayed batch recomputes from it and overwrites both directories
-(idempotent).  ``tests/test_rollup_stream.py`` pins convergence across
-restarts and duplicate delivery.
+Both are committed, snapshot first, under the epoch protocol of
+``sources/versions.py``; read them with
+``versions.read_latest(spark, [snapshot_dir, rollup_dir])``.
+``tests/test_rollup_stream.py`` pins convergence across restarts,
+duplicate delivery and retention, and that a replay with different
+content raises.
 
 Scale: the rollup side is dimension-bounded and the maintenance reads
 the snapshot only through one semi-join on the batch's keys.  The
@@ -29,50 +27,14 @@ the rollup on this epoch protocol.
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental import additive_rollup, maintain_rollup
 from ..operators.merge import apply_changes, merge_snapshot
-
-
-def _epochs(path: str) -> list[int]:
-    # Local-FS listing (os.listdir + _SUCCESS markers) — right for
-    # tests and single-node runs; on HDFS/S3 swap this helper for the
-    # Hadoop FileSystem API (same protocol: list epoch= dirs, require
-    # the commit marker).  The protocol itself is store-agnostic.
-    try:
-        names = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("epoch=") and os.path.exists(os.path.join(path, n, "_SUCCESS")):
-            out.append(int(n.split("=", 1)[1]))
-    return sorted(out)
-
-
-def latest_epoch(snapshot_dir: str, rollup_dir: str) -> int | None:
-    """Largest epoch committed in BOTH artifacts (the read frontier)."""
-    both = set(_epochs(snapshot_dir)) & set(_epochs(rollup_dir))
-    return max(both) if both else None
-
-
-def read_rollup(spark: SparkSession, snapshot_dir: str, rollup_dir: str) -> DataFrame:
-    e = latest_epoch(snapshot_dir, rollup_dir)
-    if e is None:
-        raise FileNotFoundError(f"no committed epoch under {rollup_dir}")
-    return spark.read.parquet(os.path.join(rollup_dir, f"epoch={e}"))
-
-
-def read_snapshot(spark: SparkSession, snapshot_dir: str, rollup_dir: str) -> DataFrame:
-    e = latest_epoch(snapshot_dir, rollup_dir)
-    if e is None:
-        raise FileNotFoundError(f"no committed epoch under {snapshot_dir}")
-    return spark.read.parquet(os.path.join(snapshot_dir, f"epoch={e}"))
+from ..sources import versions
 
 
 def rollup_stream(
@@ -94,35 +56,20 @@ def rollup_stream(
     output shape).  Batches must be time-ordered between epochs (the
     same contract as the batch merge fold)."""
 
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = latest_epoch(snapshot_dir, rollup_dir)
-        if prev is not None and prev >= batch_id:
-            return  # duplicate delivery of an already-committed epoch
+    def fold(batch, prev):
         if prev is None:
             snapshot = apply_changes(batch, primary_keys, order_by)
             rollup = additive_rollup(snapshot, dims, sum_cols, count_col)
         else:
-            old_snap = spark.read.parquet(
-                os.path.join(snapshot_dir, f"epoch={prev}")
-            )
-            old_roll = spark.read.parquet(os.path.join(rollup_dir, f"epoch={prev}"))
+            old_snap, old_roll = prev
             rollup = maintain_rollup(
                 old_roll, old_snap, batch, primary_keys, order_by,
                 dims, sum_cols, count_col,
             )
             snapshot = merge_snapshot(old_snap, batch, primary_keys, order_by)
-        # snapshot first, rollup second: the reader's frontier moves
-        # only once both exist, and a replay overwrites both.
-        snapshot.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, f"epoch={batch_id}")
-        )
-        rollup.write.mode("overwrite").parquet(
-            os.path.join(rollup_dir, f"epoch={batch_id}")
-        )
+        yield snapshot
+        yield rollup
 
-    writer = changes.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return versions.start(
+        changes, [snapshot_dir, rollup_dir], checkpoint_dir, fold, available_now
     )
-    trigger = {"availableNow": True} if available_now else {}
-    return writer.trigger(**trigger).start()

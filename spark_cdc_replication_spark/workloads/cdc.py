@@ -49,10 +49,17 @@ def _changes(spark: SparkSession, sf_dir: str, where: str | None = None) -> Data
     variant therefore reuses the one warmed frame instead of paying its
     own envelope-synth + JSON-parse + persist (round 3's
     ``cdc_merge_incremental`` regression was exactly two cold cache
-    builds landing inside the timed region)."""
+    builds landing inside the timed region).
+
+    The build materializes the frame before the store serves it, so no
+    consumer's plan builds the cache: a cold ``cdc_antijoin_survivors``
+    would otherwise scan the unbuilt frame from both sides of its
+    anti-join at once, one scan waiting on the other's blocks."""
 
     def build():
-        return parse_envelope(cdc_envelope(spark, sf_dir), CDC_PAYLOAD_SCHEMA).persist()
+        df = parse_envelope(cdc_envelope(spark, sf_dir), CDC_PAYLOAD_SCHEMA).persist()
+        df.count()
+        return df
 
     base = artifacts.get(spark, sf_dir, "changes", build)
     return base.where(where) if where else base
@@ -66,7 +73,7 @@ def warm_changes(spark: SparkSession, sf_dir: str) -> None:
     in round 2's recording).  Filtered variants (``where=...``) are
     plain filters over this same persisted frame, so this single warm
     covers them all."""
-    _changes(spark, sf_dir).count()
+    _changes(spark, sf_dir)
 
 
 def _present(df: DataFrame) -> DataFrame:

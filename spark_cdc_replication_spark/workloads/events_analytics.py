@@ -23,7 +23,7 @@ from ..operators.asofjoin import asof_join
 from ..operators.merge import latest_per_key
 from ..operators.rangejoin import range_join
 from ..operators.windows import hopping_counts, sessionize, tumbling_counts
-from ..sources import artifacts
+from ..sources import artifacts, versions
 
 #: µs-pinned events relation for every oracle below.
 _EV_US = "ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events)"
@@ -663,19 +663,17 @@ def q_events_drift_psi_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed artifact instead of recomputed: an ``availableNow``
     ``drift_stream`` run ingests the odd-user cohort against the
     even-user reference counts, and this query reads the latest
-    committed epoch's report (``read_drift_report``) — the
+    committed epoch's report (``versions.read_latest``) — the
     ``text_bm25_topk`` persisted-serve pattern applied to the drift
     monitor, driver-hash-checked against the same PSI oracle as the
     batch query.  Proves counts-first/report-second epoch commit +
     additive count IVM end-to-end, not just batch≡stream in pytest."""
     import os
 
-    from ..streaming.drift_stream import read_drift_report
-
     root = _drift_report_store(spark, sf_dir)
-    return read_drift_report(
-        spark, os.path.join(root, "counts"), os.path.join(root, "report")
-    )
+    return versions.read_latest(
+        spark, [os.path.join(root, "counts"), os.path.join(root, "report")]
+    )[1]
 
 
 def q_events_drift_psi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,7 +38,7 @@ from ..operators.textanalysis import (
     quality_score,
     text_stats,
 )
-from ..sources import artifacts
+from ..sources import artifacts, versions
 
 _STOPLIST_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 #: DuckDB twin of functions.text.words / normalized
@@ -3189,12 +3189,10 @@ def q_corpus_divergence_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture monitor, not just batch≡stream in pytest."""
     import os
 
-    from ..streaming.divergence_stream import read_divergence_report
-
     root = _divergence_report_store(spark, sf_dir)
-    return read_divergence_report(
-        spark, os.path.join(root, "counts"), os.path.join(root, "report")
-    )
+    return versions.read_latest(
+        spark, [os.path.join(root, "counts"), os.path.join(root, "report")]
+    )[1]
 
 
 #: r11 gate-window debut (staged r10 — never-green oracles must enter

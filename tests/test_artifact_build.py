@@ -213,3 +213,36 @@ def test_one_entry_and_root_per_absolute_dir(spark, sf, tmp_path, monkeypatch):
     assert os.path.isdir(root) and os.path.isdir(other_root)
     artifacts.release(spark, "sf", "token_index")
     assert not os.path.exists(other_root)
+
+
+def test_cold_changes_parse_once(spark, sf_dir, monkeypatch):
+    """A cold parsed-change frame is materialized inside its store
+    build, so the store never serves a lazily persisted frame that a
+    plan scanning it twice (both sides of ``cdc_antijoin_survivors``)
+    computes twice: the envelope parse has run when ``_changes``
+    returns, and a cold anti-join runs it no more (each envelope row
+    passes the counting filter once)."""
+    from pyspark.sql import functions as F
+
+    from spark_cdc_replication_spark.workloads import cdc
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    counted = F.udf(count_row, "boolean").asNondeterministic()
+    real = cdc.cdc_envelope
+    n_rows = real(spark, sf_dir).count()
+    monkeypatch.setattr(
+        cdc, "cdc_envelope", lambda s, d: real(s, d).filter(counted(F.col("value")))
+    )
+    artifacts.release(spark, sf_dir, "changes")
+    try:
+        cdc._changes(spark, sf_dir)
+        assert seen.value == n_rows
+        cdc.q_antijoin_survivors(spark, sf_dir).collect()
+        assert seen.value == n_rows
+    finally:
+        artifacts.release(spark, sf_dir, "changes")

@@ -13,10 +13,8 @@ from spark_cdc_replication_spark.operators.sampling import (
     dsir_bucket_counts,
     unigram_divergence,
 )
-from spark_cdc_replication_spark.streaming.divergence_stream import (
-    divergence_stream,
-    read_divergence_report,
-)
+from spark_cdc_replication_spark.sources.versions import read_latest
+from spark_cdc_replication_spark.streaming.divergence_stream import divergence_stream
 
 SCHEMA = "doc_id long, source string, text string"
 
@@ -74,7 +72,7 @@ def test_streamed_divergence_equals_batch_report(spark, tmp_path):
     for b in (BATCH1, BATCH2):
         spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
-    got = _key(read_divergence_report(spark, dirs["counts"], dirs["report"]).collect())
+    got = _key(read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect())
     want = _key(_batch_report(spark, BATCH1 + BATCH2).collect())
     assert got == want
     # blank-only sources have no tokens and no row (the batch contract)
@@ -88,13 +86,13 @@ def test_divergence_stream_restart_extends_counts(spark, tmp_path):
     spark.createDataFrame(BATCH1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
     assert _key(
-        read_divergence_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     ) == _key(_batch_report(spark, BATCH1).collect())
     # restart with one more file: counts must extend, not reset
     spark.createDataFrame(BATCH2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
     assert _key(
-        read_divergence_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     ) == _key(_batch_report(spark, BATCH1 + BATCH2).collect())
 
 
@@ -107,12 +105,12 @@ def test_divergence_stream_duplicate_delivery_is_noop(spark, tmp_path):
         spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
     first = _key(
-        read_divergence_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     )
     shutil.rmtree(dirs["ckpt"])  # full at-least-once replay of batches 0..n
     _run(spark, src, dirs)
     assert (
-        _key(read_divergence_report(spark, dirs["counts"], dirs["report"]).collect())
+        _key(read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect())
         == first
     )
 

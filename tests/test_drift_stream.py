@@ -9,10 +9,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_cdc_replication_spark.operators.validate import drift_report
-from spark_cdc_replication_spark.streaming.drift_stream import (
-    drift_stream,
-    read_drift_report,
-)
+from spark_cdc_replication_spark.sources.versions import read_latest
+from spark_cdc_replication_spark.streaming.drift_stream import drift_stream
 
 SCHEMA = "id long, c string"
 
@@ -50,7 +48,7 @@ def test_streamed_drift_equals_batch_report(spark, tmp_path):
         spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
 
-    got = _report_key(read_drift_report(spark, dirs["counts"], dirs["report"]).collect())
+    got = _report_key(read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect())
     want = _report_key(
         drift_report(
             spark.createDataFrame(REFERENCE, SCHEMA),
@@ -69,7 +67,7 @@ def test_drift_stream_restart_extends_counts(spark, tmp_path):
     spark.createDataFrame(BATCH1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
     first = _report_key(
-        read_drift_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     )
     assert first == _report_key(
         drift_report(
@@ -81,7 +79,7 @@ def test_drift_stream_restart_extends_counts(spark, tmp_path):
     # restart with one more file: counts must extend, not reset
     spark.createDataFrame(BATCH2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
-    got = _report_key(read_drift_report(spark, dirs["counts"], dirs["report"]).collect())
+    got = _report_key(read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect())
     want = _report_key(
         drift_report(
             spark.createDataFrame(REFERENCE, SCHEMA),
@@ -94,8 +92,9 @@ def test_drift_stream_restart_extends_counts(spark, tmp_path):
 
 def test_drift_stream_duplicate_delivery_is_noop(spark, tmp_path):
     """Wiping the checkpoint redelivers every batch id from 0; the
-    epoch guard (prev >= batch_id) must skip them all — counts and
-    report unchanged, no double-counting of redelivered rows."""
+    replay guard must skip them all (their fingerprints match) —
+    counts and report unchanged, no double-counting of redelivered
+    rows."""
     import shutil
 
     src = str(tmp_path / "src")
@@ -104,12 +103,12 @@ def test_drift_stream_duplicate_delivery_is_noop(spark, tmp_path):
         spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _run(spark, src, dirs)
     first = _report_key(
-        read_drift_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     )
     shutil.rmtree(dirs["ckpt"])  # full at-least-once replay of batches 0..n
     _run(spark, src, dirs)
     again = _report_key(
-        read_drift_report(spark, dirs["counts"], dirs["report"]).collect()
+        read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect()
     )
     assert again == first
 
@@ -151,6 +150,62 @@ def test_drift_stream_replay_with_different_packing_raises(spark, tmp_path):
     except (StreamingQueryException, Py4JJavaError):
         raised = True
     assert raised, "replay with different batch packing must fail, not no-op"
+
+
+def test_drift_stream_replay_same_counts_different_rows_raises(spark, tmp_path):
+    """The collision window of a category-count guard: a wiped
+    checkpoint re-packs batch 0 with rows whose category counts equal
+    the committed batch's but whose ids differ.  The content-bound
+    guard must raise."""
+    import shutil
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    dirs = {k: str(tmp_path / k) for k in ("counts", "report", "ckpt")}
+    spark.createDataFrame(BATCH1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    _run(spark, src, dirs)
+    shutil.rmtree(dirs["ckpt"])
+    src2 = str(tmp_path / "src2")
+    shifted = [(i + 1000, c) for i, c in BATCH1]  # same counts per category
+    spark.createDataFrame(shifted, SCHEMA).coalesce(1).write.mode("append").parquet(src2)
+    ref_counts = (
+        spark.createDataFrame(REFERENCE, SCHEMA)
+        .groupBy(F.col("c").alias("category"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    q = drift_stream(
+        spark.readStream.schema(SCHEMA).parquet(src2),
+        ref_counts, "c", dirs["counts"], dirs["report"], dirs["ckpt"],
+    )
+    try:
+        q.awaitTermination(120)
+        raised = q.exception() is not None
+    except (StreamingQueryException, Py4JJavaError):
+        raised = True
+    assert raised, "count-colliding re-pack with different rows must fail"
+
+
+def test_drift_stream_null_category_counts_across_epochs(spark, tmp_path):
+    """A NULL category seen in two epochs is one bucket of the running
+    counts, so the report still equals the batch drift_report."""
+    src = str(tmp_path / "src")
+    dirs = {k: str(tmp_path / k) for k in ("counts", "report", "ckpt")}
+    b1 = BATCH1 + [(50, None), (51, None)]
+    b2 = BATCH2 + [(150, None)]
+    for b in (b1, b2):
+        spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    _run(spark, src, dirs)
+    got = _report_key(read_latest(spark, [dirs["counts"], dirs["report"]])[1].collect())
+    want = _report_key(
+        drift_report(
+            spark.createDataFrame(REFERENCE, SCHEMA),
+            spark.createDataFrame(b1 + b2, SCHEMA),
+            "c",
+        ).collect()
+    )
+    assert got == want
 
 
 def test_drift_served_query_matches_batch_recompute(spark, sf_dir):

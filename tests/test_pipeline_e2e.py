@@ -348,6 +348,69 @@ def test_promote_history_truncates_daily(spark, sf_dir, pipe, tmp_path):
     assert spark.table(daily).count() == 0  # reference truncate-after-merge
 
 
+def _land_sparse_feed(spark, root: str) -> list[dt.date]:
+    """1,000 keys created on day 1, then 20 updates a day on days 2-4
+    (a feed that touches few keys a day, unlike the ``events`` fixture)."""
+    days = [dt.date(2024, 3, d) for d in range(1, 5)]
+
+    def env(day, i, key, op):
+        ts = dt.datetime.combine(day, dt.time()) + dt.timedelta(seconds=i)
+        payload = {"id": f"k{key}", "event_id": i, "value": float(i), "k": str(day),
+                   "__op": op, "__deleted": "false"}
+        return (ts.isoformat(sep=" "), json.dumps(payload))
+
+    rows = [env(days[0], key, key, "c") for key in range(1000)]
+    for n, day in enumerate(days[1:]):
+        rows += [env(day, 1000 * (n + 1) + j, 20 * n + j, "u") for j in range(20)]
+    land_envelopes(spark, root, "parquet", rows, CDC_PAYLOAD_SCHEMA)
+    return days
+
+
+@pytest.mark.parametrize("target", ["daily", "history"])
+def test_kill_between_drop_and_rename_keeps_the_table(
+    spark, pipe, tmp_path, monkeypatch, target
+):
+    """A run killed between the staging swap's DROP and RENAME leaves
+    the table only under its staging name.  The next runs must rename
+    it back, not bootstrap a new table from one day: after two more
+    normal days the table equals the replay of the whole feed."""
+    days = _land_sparse_feed(spark, pipe.spec.data_dir)
+    daily, history = f"cdc_sparse_{target}_d", f"cdc_sparse_{target}_h"
+    table = daily if target == "daily" else history
+    for t in (daily, history, f"{daily}__staging", f"{history}__staging"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def run(day):
+        if target == "daily":
+            pipe.merge_day(day, daily)
+        else:
+            pipe.promote_history(day, daily, history)
+
+    run(days[0])
+    real_sql = spark.sql
+
+    def killed(query, *args, **kwargs):
+        if "RENAME" in query:
+            raise RuntimeError("simulated kill between DROP and RENAME")
+        return real_sql(query, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(spark, "sql", killed)
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            run(days[1])
+    assert not catalog.table_exists(spark, table)
+    assert catalog.table_exists(spark, f"{table}__staging")
+    for day in days[2:]:
+        run(day)
+
+    def rows(df):
+        return {tuple(sorted(r.asDict().items())) for r in df.collect()}
+
+    got = rows(spark.table(table))
+    assert len(got) == 1000
+    assert got == rows(pipe.rebuild_snapshot(days[-1]).select(*spark.table(table).columns))
+
+
 def test_bounded_epochs_land_identically(spark, sf_dir, pipe, tmp_path):
     """maxFilesPerTrigger backpressure: an 8-file backlog drained as
     bounded micro-batches (<=2 files each) must land EXACTLY the rows

@@ -437,3 +437,27 @@ def test_t_closeness_joins_stay_on_bounded_relations(spark, sf_dir):
     plan = final_plan(t_closeness(cust, qi, "c_mktsegment"))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_dup_clusters_round_one_reuses_init_aggregate_exchange(spark, monkeypatch):
+    """dup_clusters' round 1 reads the un-checkpointed init aggregate on
+    both its join and its union side.  The two must share one exchange
+    over the edge blocks (a ReusedExchange in the round's final plan),
+    so deferring the first checkpoint does not shuffle the edges twice."""
+    from spark_cdc_replication_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    cls = type(pairs)
+    real = cls.localCheckpoint
+    plans = []
+
+    def recording(self, eager=True, storageLevel=None):
+        out = real(self, eager, storageLevel)
+        if eager:  # the round checkpoints; the deferred edge one is lazy
+            plans.append(plan_of(self).split("== Initial Plan ==")[0])
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    got = {(r.doc_id, r.cluster_id) for r in dup_clusters(pairs).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert "ReusedExchange" in plans[0], plans[0]
